@@ -27,6 +27,7 @@ _INFRA_RETRY_SIGNATURES = ("Python worker failed to connect back",)
 def pytest_runtest_protocol(item, nextitem):
     from _pytest.runner import runtestprotocol
 
+    item.ihook.pytest_runtest_logstart(nodeid=item.nodeid, location=item.location)
     reports = runtestprotocol(item, nextitem=nextitem, log=False)
     if any(
         r.failed
@@ -40,13 +41,39 @@ def pytest_runtest_protocol(item, nextitem):
         reports = runtestprotocol(item, nextitem=nextitem, log=False)
     for r in reports:
         item.ihook.pytest_runtest_logreport(report=r)
+    item.ihook.pytest_runtest_logfinish(nodeid=item.nodeid, location=item.location)
     return True
+
+
+def _host_cpus() -> int:
+    return len(os.sched_getaffinity(0))
+
+
+# Test-session size: SPARK_GRAFT_CPUS cores (default 8, the session
+# shape the suite was written against), never more than the host has;
+# the oracle-parity pool uses the same count.
+TEST_CPUS = min(int(os.environ.get("SPARK_GRAFT_CPUS") or 8), _host_cpus())
+
+
+def _driver_mem() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else a quarter of physical memory within
+    [2g, 16g]: the package's 48g default lets the heap grow past a
+    small host's RAM, and the kernel then kills the test JVM."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(2048, min(16384, phys_mb // 4))}m"
 
 
 @pytest.fixture(scope="session")
 def spark():
     from data_finder_comparator_spark.session import get_spark
 
-    spark = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark(
+        app_name="tests",
+        cpus=TEST_CPUS,
+        shuffle_partitions=TEST_CPUS,
+        extra_conf={"spark.driver.memory": _driver_mem()},
+    )
     yield spark
     spark.stop()

@@ -1982,6 +1982,7 @@ def test_lakehouse_randomized_concurrent_writers_serialize_on_http_store(
     server, base = serve_store_http(backing)
     real_build = urllib.request.build_opener
     counter = itertools.count(1)
+    claims = itertools.count(1)  # conditional PUTs only
     lock = threading.Lock()
     injected = {"dropped": 0, "throttled": 0}
 
@@ -1990,14 +1991,12 @@ def test_lakehouse_randomized_concurrent_writers_serialize_on_http_store(
             self.real = real
 
         def open(self, req, timeout=None):
+            method = req.get_method() if hasattr(req, "get_method") else "GET"
+            claim = method == "PUT" and req.has_header("If-none-match")
             with lock:
                 n = next(counter)
-            method = req.get_method() if hasattr(req, "get_method") else "GET"
-            if (
-                n % 11 == 0
-                and method == "PUT"
-                and req.has_header("If-none-match")
-            ):
+                c = next(claims) if claim else 0
+            if claim and c % 11 == 0:
                 # applied server-side, response dropped: the retry must
                 # read back and recognize its own winning claim
                 self.real.open(req, timeout=timeout).read()

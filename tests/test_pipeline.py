@@ -5,6 +5,7 @@ sink — including the Replace-as-upsert variant."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_finder_comparator_spark.config import EngineConfig
@@ -89,6 +90,187 @@ def test_streaming_mode_and_distances(spark, tmp_path):
             spark,
             EngineConfig(search_path=search_path, data_folder=folder, streaming=True),
         )
+
+
+def _write_stream_fixtures(tmp_path, n_files: int = 2):
+    """A two-file catalog with drifting schemas and ``n_files`` probe
+    files in one folder (the stream drains one file per micro-batch).
+    Each file holds an exact, a unique-best, a tied-best and a
+    poor-only probe; ``src`` names the file, so the sink can be split
+    back into files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    folder = tmp_path / "catalog"
+    folder.mkdir(parents=True)
+    pq.write_table(
+        pa.table({
+            "sku": ["CH-S09FTXD-BL/SC", "cold widget", "bolt m8x20", "bolt m8x30"],
+            "stock": [1.0, 2.0, 3.0, 4.0],
+        }),
+        str(folder / "f0.parquet"),
+    )
+    pq.write_table(
+        pa.table({
+            "sku": ["washer zinc 10", "NUT HEX M6", "nut hex m5"],
+            "region": ["EU", "US", "APAC"],
+        }),
+        str(folder / "f1.parquet"),
+    )
+    probes = [
+        ["ch s09ftxd bl sc", "cold widgetx", "bolt m8x40", "zzzzzzzzzzzz"],
+        ["nut-hex-m6", "washer zinc 1", "nut hex m7", "qqqqqqqqqq"],
+    ]
+    search = tmp_path / "search"
+    search.mkdir()
+    for i in range(n_files):
+        keys = probes[i % 2]
+        pq.write_table(
+            pa.table({
+                "sku": keys,
+                "src": [f"f{i}"] * len(keys),
+                "price": [float(10 * i + j) for j in range(len(keys))],
+            }),
+            str(search / f"probes-{i:03d}.parquet"),
+        )
+    return str(search), str(folder)
+
+
+def _cache_entries(spark) -> int:
+    """Entries in the session's cache manager (persisted DataFrames,
+    materialized or not)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+@pytest.mark.parametrize("path", ["dense", "banded", "large_files"])
+def test_streaming_sink_equals_batch_per_file(spark, tmp_path, monkeypatch, path):
+    """A streamed run's sink equals, file by file, a batch run of each
+    probe file (row identity is per file in streaming mode). With the
+    catalog under the dense cap every epoch takes the dense one-pass
+    path over the catalog prepared once; with the cap forced to 0 the
+    banded plan over it; and with files whose rows times the catalog
+    size pass the epoch pair gate (4 probes x 7 catalog keys here) the
+    batch-mode plan."""
+    from data_finder_comparator_spark import pipeline
+    from data_finder_comparator_spark.operators import fuzzy_join
+
+    if path == "banded":
+        monkeypatch.setattr(fuzzy_join, "_DENSE_CAND_MAX", 0)
+    if path == "large_files":
+        monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7 - 1)
+    else:
+        monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7)
+    dense_calls = []
+    real_dense = fuzzy_join._dense_tiers
+    monkeypatch.setattr(
+        fuzzy_join,
+        "_dense_tiers",
+        lambda *a: dense_calls.append(1) or real_dense(*a),
+    )
+    search_path, folder = _write_stream_fixtures(tmp_path)
+    cfg = EngineConfig(
+        search_path=search_path,
+        data_folder=folder,
+        output_path=str(tmp_path / "stream_out"),
+        threshold=3,
+        streaming=True,
+        output_distances=True,
+    )
+    sink = run_find_compare(spark, cfg)
+    assert len(dense_calls) == (2 if path == "dense" else 0)
+
+    def rows(df):
+        return sorted(map(repr, df.select(sorted(df.columns)).collect()))
+
+    for i in range(2):
+        batch = run_find_compare(
+            spark,
+            EngineConfig(
+                search_path=f"{search_path}/probes-{i:03d}.parquet",
+                data_folder=folder,
+                threshold=3,
+                output_distances=True,
+            ),
+        )
+        assert rows(sink.filter(F.col("src") == f"f{i}")) == rows(batch)
+    got = {r.sku: r.match_dist for r in sink.collect()}
+    assert got["ch s09ftxd bl sc"] == 0  # exact: kept
+    assert got["cold widget"] == 1  # unique best: replaced
+    assert got["bolt m8x40"] == 1  # tied best: kept
+    assert got["zzzzzzzzzzzz"] is None  # poor only: kept, no distance
+
+
+def test_streaming_releases_prepared_catalog(spark, tmp_path):
+    """The catalog prepared for a streamed run is released when the
+    call returns, and also when it raises after the preparation (here
+    a search path that does not exist)."""
+    search_path, folder = _write_stream_fixtures(tmp_path)
+    cfg = EngineConfig(
+        search_path=search_path,
+        data_folder=folder,
+        output_path=str(tmp_path / "stream_out"),
+        streaming=True,
+    )
+    before = _cache_entries(spark)
+    run_find_compare(spark, cfg).count()
+    assert _cache_entries(spark) == before
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        run_find_compare(
+            spark,
+            EngineConfig(
+                search_path=str(tmp_path / "missing"),
+                data_folder=folder,
+                output_path=str(tmp_path / "stream_out2"),
+                streaming=True,
+            ),
+        )
+    assert _cache_entries(spark) == before
+
+
+def _jobs_launched(spark, call) -> int:
+    """Spark jobs launched while ``call()`` runs, by job-id range in the
+    status store (streaming epochs run under the query's own job group,
+    so a count by group would miss them)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max(jobs.apply(i).jobId() for i in range(jobs.size())) if jobs.size() else -1
+
+    first = last_job()
+    call()
+    return last_job() - first
+
+
+# Job-count floor of a streamed run_find_compare against a small catalog,
+# by job-id range: per micro-batch 4 (the dense tier pass with its
+# curation, and the sink write), per call 8 more (catalog and probe
+# schema reads, catalog preparation). Counts do not move with host noise.
+_STREAM_JOBS_PER_BATCH = 4
+_STREAM_JOBS_FIXED = 8
+
+
+def test_streaming_job_count(spark, tmp_path):
+    """The prepared catalog keeps each micro-batch at its job floor:
+    the jobs of a 1-file and a 2-file streamed run differ by one
+    batch's jobs."""
+    counts = []
+    for n_files in (1, 2):
+        search_path, folder = _write_stream_fixtures(tmp_path / f"n{n_files}", n_files)
+        cfg = EngineConfig(
+            search_path=search_path,
+            data_folder=folder,
+            output_path=str(tmp_path / f"out{n_files}"),
+            streaming=True,
+        )
+        counts.append(_jobs_launched(spark, lambda: run_find_compare(spark, cfg)))
+    per_batch = counts[1] - counts[0]
+    assert per_batch <= _STREAM_JOBS_PER_BATCH, counts
+    assert counts[0] - per_batch <= _STREAM_JOBS_FIXED, counts
 
 
 def test_read_folder_union_null_fills(spark, tmp_path):
