@@ -29,26 +29,16 @@ from data_finder_comparator_spark.session import get_spark  # noqa: E402
 # json_folder_roundtrip, whose cost profile changed in r16 (the
 # loss-free inference probe's second pass) without ever being
 # measured. Deriving from QUERIES means a registered row can never be
-# cost-invisible again; rows that genuinely cannot bench must be named
-# (with the reason) in BENCH_OPT_OUT, which is empty today. Retired
-# queries leave the bench with their registry slot, as before.
-BENCH_OPT_OUT: dict[str, str] = {}  # name -> reason; every entry is a skip
-
-HEADLINE = [n for n in QUERIES if n not in BENCH_OPT_OUT]
+# cost-invisible again. Retired queries leave the bench with their
+# registry slot, as before.
+HEADLINE = list(QUERIES)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
     spark = get_spark(app_name="bench")
-    # HEADLINE is the whole registry minus BENCH_OPT_OUT;
-    # SPARK_GRAFT_BENCH_ALL forces even the opted-out rows in (today a
-    # no-op — the opt-out dict is empty — but the knob's meaning is
-    # "bench literally everything", and with the registry-derived list
-    # the opt-outs are the only thing left to add)
     names = list(HEADLINE)
-    if os.environ.get("SPARK_GRAFT_BENCH_ALL"):
-        names += [n for n in QUERIES if n in BENCH_OPT_OUT]
 
     # Warmup: run the first query once on the smoke SF to JIT the stack.
     try:

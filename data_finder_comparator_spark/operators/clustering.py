@@ -95,6 +95,8 @@ def kmeans_lloyd_dense(
     everywhere else in the similarity family). Returns (cluster_id,
     dim, centroid_val double, n_vectors long) — k×dims rows.
     """
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
     v = vecs.select(
         F.col(id_col).cast("long").alias("vec_id"),
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("vec"),

@@ -27,9 +27,12 @@ Scale design (this is where the Spark version stops being a loop):
   ``levenshtein(a, b, t)`` (Spark >= 3.5) which early-exits the DP at
   O(len * t) instead of O(len^2).
 * Phase 2 (the ``poor`` fallback — a full-candidate global argmin, like
-  the reference's rescan at main.py:222-228 but ONE extra job over the
-  minority of probes with no within-threshold match, not a 2x recompute
-  for every probe).
+  the reference's rescan at main.py:222-228, but only over the minority
+  of probes with no within-threshold pair). It runs the escalation
+  ladder ``_escalate``: bucketed length-band equi-joins at doubling
+  widths up to the longest string, one action per round, never a
+  cartesian. ``topk_fuzzy_join`` runs the same ladder with a top-k
+  filter in place of the argmin-ties filter.
 * ``strategy="broadcast"`` broadcasts the candidate side (no shuffle —
   right whenever candidates fit in memory, the reference's regime).
   ``strategy="band"`` turns the length-band predicate into an
@@ -47,9 +50,11 @@ Output: one row per (probe, candidate, tier) membership —
 from __future__ import annotations
 
 import os as _os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.normalize import norm_key
 from ..partitioning import fanout_partitions as _fanout_partitions
@@ -119,7 +124,6 @@ def tiered_fuzzy_join(
     cand_val: str = "cand",
     threshold: int = 3,
     strategy: str = "broadcast",
-    cache_intermediate: bool = True,
     cache_registry: list | None = None,
     prepared: PreparedCandidates | None = None,
     dedup_strings: bool | str = False,
@@ -130,13 +134,12 @@ def tiered_fuzzy_join(
     probe must have (probe_id, probe_val); cand (cand_id, cand_val).
     Returns OUT_COLS with ``dist`` as long and ``tier`` as string.
 
-    ``cache_intermediate=False`` skips the phase-1 persist entirely
-    (the phase-1 subtree is then recomputed by each of its three
-    consumers). Repeated callers (e.g. one call per streaming
-    micro-batch) should instead pass ``cache_registry=[]``: persisted
-    DataFrames are appended to it, and the caller unpersists them right
-    after its action — keeping the single-evaluation benefit without
-    accumulating cached blocks across calls.
+    The phase-1 pairs are always persisted.
+    Repeated callers (e.g. one call per streaming micro-batch) should
+    pass ``cache_registry=[]``: persisted DataFrames are appended to
+    it, and the caller unpersists them right after its action — keeping
+    the single-evaluation benefit without accumulating cached blocks
+    across calls.
 
     ``dedup_strings`` (qgram strategy only) runs candidate generation
     AND the DP once per distinct (normalized-probe, normalized-cand)
@@ -151,7 +154,7 @@ def tiered_fuzzy_join(
     two extra corpus-sized distinct aggregations for nothing — hence
     opt-in, measured either way in SCALE.md's inflation table.
 
-    ``dedup_strings="auto"`` (round 9) resolves the flag from a cheap
+    ``dedup_strings="auto"`` resolves the flag from a cheap
     duplication probe: one (count, approx_count_distinct) aggregation
     per side on the normalized key; dedup flips on when the product of
     the two duplication factors reaches ``_DEDUP_AUTO_FACTOR`` (4 —
@@ -338,10 +341,9 @@ def tiered_fuzzy_join(
     # consumed twice (tier classification + matched-probe anti-join);
     # persist so the banded scoring pass runs once, not twice — at
     # cluster scale this would be a checkpoint/exchange reuse
-    if cache_intermediate:
-        within = within.persist()
-        if cache_registry is not None:
-            cache_registry.append(within)
+    within = within.persist()
+    if cache_registry is not None:
+        cache_registry.append(within)
 
     w = Window.partitionBy("probe_id")
     within = within.withColumn(
@@ -376,8 +378,25 @@ def tiered_fuzzy_join(
     )
     seen = within.select("probe_id").distinct()
     unseen = p.join(seen, "probe_id", "left_anti")
-    poor_rescan = _global_argmin_escalating(
-        unseen, c, t, broadcast_cand=strategy == "broadcast", prepared=prepared
+
+    def keep_argmin(scored: DataFrame, final: bool) -> DataFrame:
+        # any survivor beats every non-survivor, so a probe's surviving
+        # argmin ties are its global argmin ties
+        return (
+            scored.withColumn("_min", F.min("dist").over(w))
+            .filter(F.col("dist") == F.col("_min"))
+            .withColumn("tier", F.lit("poor"))
+            .select(*OUT_COLS)
+        )
+
+    poor_rescan = _escalate(
+        unseen,
+        c,
+        prepared,
+        width=max(2 * t, 2),
+        broadcast_cand=strategy == "broadcast",
+        keep=keep_argmin,
+        extra=T.StructField("tier", T.StringType()),
     )
 
     return tiers_within.unionByName(poor_exact).unionByName(poor_rescan)
@@ -402,7 +421,7 @@ _DENSE_CAND_MAX = int(_os.environ.get("SPARK_GRAFT_DENSE_CANDS", "4096"))
 # the normalized key) reaches this — the point where per-string-pair
 # work shrinks enough to clear the two extra distinct aggregations
 # (~10% at x1, 10.8x win at the x64 duplicate-heavy rung, SCALE.md).
-_DEDUP_AUTO_FACTOR = float(_os.environ.get("SPARK_GRAFT_DEDUP_AUTO_FACTOR", "4.0"))
+_DEDUP_AUTO_FACTOR = 4.0
 
 
 def _dense_tiers(p: DataFrame, c: DataFrame, t: int) -> DataFrame:
@@ -446,16 +465,17 @@ def _dense_tiers(p: DataFrame, c: DataFrame, t: int) -> DataFrame:
 # (by then tiny) remainder falls back to a broadcast nested-loop scan.
 _FALLBACK_MAX_ROUNDS = 8
 
-# Diagnostics: per-round progress of the escalation loop on stderr.
-_FALLBACK_DEBUG = bool(_os.environ.get("SPARK_GRAFT_FUZZY_DEBUG"))
-
-# Adaptive shortcut for the escalation loops: when the remaining-probe
+# Adaptive shortcut for the escalation ladder: when the remaining-probe
 # x candidate product is at most this many pairs, the exact final-width
 # round costs less than ONE doubling round's scheduling overhead — jump
 # straight to it. The plan stays a bucketed band equi-join (never a
 # cartesian); only the width choice adapts, exactly like AQE choosing a
 # broadcast join from an observed size.
 _FALLBACK_SMALL_PRODUCT = 1 << 20
+
+# First width of top-k's ladder: a probe needs k survivors, not one,
+# so top-k starts wider than the fallback's 2t.
+_TOPK_START_WIDTH = 8
 
 
 def _bucketed_band_pairs(
@@ -480,51 +500,50 @@ def _bucketed_band_pairs(
     return joined.filter(F.abs(F.length("_nq") - F.length("_nc")) <= width)
 
 
-def _global_argmin_escalating(
-    unseen: DataFrame,
+def _escalate(
+    remaining: DataFrame,
     c: DataFrame,
-    t: int,
+    prepared: PreparedCandidates | None,
+    width: int,
     broadcast_cand: bool,
-    prepared: PreparedCandidates | None = None,
+    keep: Callable[[DataFrame, bool], DataFrame],
+    extra: T.StructField,
 ) -> DataFrame:
-    """All-ties global argmin over the candidate set for each probe in
-    ``unseen``, via escalating band widths (2t, 4t, ...) instead of a
-    cartesian product.
+    """The escalation ladder shared by the ``poor`` fallback and top-k:
+    per probe in ``remaining``, the rows ``keep`` selects from its
+    scored pairs at the smallest length-band width that settles it,
+    instead of a cartesian product.
 
-    Correctness of each round at width W: scoring uses the threshold DP
-    ``levenshtein(a, b, W)``, so every surviving pair has dist <= W,
-    while every candidate OUTSIDE the band has dist >= |len diff| > W.
-    Hence if a probe has any surviving pair, its global minimum d* is
-    among them, and all argmin ties satisfy |len diff| <= d* <= W — the
-    round emits the complete, exact tie set. Probes with no surviving
-    pair have global min > W and roll into the next (doubled) width.
-    Each round is a plain hash equi-join; the cross join survives only
-    as a broadcast nested-loop over the post-escalation remainder,
-    which is empty for any corpus whose lengths are within 2^8*t of a
-    candidate length.
+    Round at width W pairs only the |len(nq)-len(nc)| <= W bucket pairs
+    and scores them with the threshold DP ``levenshtein(a, b, W)``:
+    every survivor has dist <= W, every candidate outside the band or
+    rejected by the DP has dist > W. ``keep(scored, final)`` returns
+    the probes whose answer the survivors already prove (the all-ties
+    argmin for the tier join — any survivor beats every non-survivor;
+    the top-k for top-k — k survivors do), as probe_id, probe, cand_id,
+    cand, dist and the ``extra`` column. Unsettled probes roll into the doubled width. The
+    round at W >= the longest normalized string (an upper bound on any
+    distance) covers every pair with a full DP, so there ``final`` is
+    true and every remaining probe settles. Each round is a hash
+    equi-join; the cross join survives only as a broadcast nested loop
+    over what is left after ``_FALLBACK_MAX_ROUNDS`` rounds.
 
-    Contract note: the escalation is iterative, so BUILDING the result
-    runs Spark jobs (common case: one short job proving ``unseen`` is
-    empty; the phase-1 work it materializes is persisted and reused by
-    the caller's action). The returned rows are localCheckpoint-ed —
-    tiny (argmin ties of fallback probes only) — so every intermediate
-    cache this function creates is released before it returns.
+    Building the result runs Spark jobs (one stats job, one per round).
+    The returned rows are localCheckpoint-ed, so every cache made here
+    is released before returning; ``prepared`` frames belong to the
+    caller.
     """
-    spark = unseen.sparkSession
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
-            unseen.schema["probe_id"],
-            unseen.schema["probe"],
+            remaining.schema["probe_id"],
+            remaining.schema["probe"],
             c.schema["cand_id"],
             c.schema["cand"],
             T.StructField("dist", T.LongType()),
-            T.StructField("tier", T.StringType()),
+            extra,
         ]
     )
-    empty = spark.createDataFrame([], schema)
-
+    empty = remaining.sparkSession.createDataFrame([], schema)
     internal: list[DataFrame] = []
 
     def _track(df: DataFrame) -> DataFrame:
@@ -532,30 +551,18 @@ def _global_argmin_escalating(
         internal.append(df)
         return df
 
-    def _release() -> None:
-        for df in internal:
-            df.unpersist()
-        internal.clear()
-
     try:
-        # null-normalized probes are defined out of matching entirely
-        # (the reference would crash on NaN); without this they would
-        # never resolve and force every escalation round. Same for
-        # null-normalized candidates: if none is matchable, no probe
-        # can ever resolve — skip the loop entirely. One fused agg per
-        # side answers emptiness AND the length bound in a single job;
-        # the (already-filtered) candidate side persists so the
-        # per-round band joins don't rescan the source.
-        remaining = _track(unseen.filter(F.col("_nq").isNotNull()))
+        # null-normalized keys never match (the reference would crash
+        # on NaN); left in, they would never settle and force every
+        # round. One fused agg per side answers emptiness AND the
+        # length bound in a single job.
+        remaining = _track(remaining.filter(F.col("_nq").isNotNull()))
         n_rem, max_q = remaining.agg(
             F.count(F.lit(1)), F.max(F.length("_nq"))
         ).first()
         if n_rem == 0:
             return empty
         if prepared is not None:
-            # candidate side is static across calls: its filtered frame
-            # and stats were computed once up front (lifetime owned by
-            # the caller's registry, NOT released here)
             matchable = prepared.matchable
             n_cand, max_c = prepared.n_cand, prepared.max_c
         else:
@@ -566,29 +573,19 @@ def _global_argmin_escalating(
         if n_cand == 0:
             return empty
 
-        # Upper bound on ANY remaining distance: dist(q, c) <=
-        # max(|q|, |c|) <= max observed normalized length. Once the
-        # escalated width reaches it, the band covers every pair and a
-        # FULL-DP round is guaranteed to resolve every remaining probe
-        # — so the loop terminates without the blind 8-round tail, and
-        # the broadcast-nested-loop remainder below is reachable only
-        # when the bound exceeds 2^rounds * 2t.
+        # dist(q, c) <= max(|q|, |c|): a round at this width is exact
+        # and covers every pair — the guaranteed-final round
         bound = max(max_q or 0, max_c or 0)
-
-        wf = Window.partitionBy("probe_id")
         parts: list[DataFrame] = []
-        width = max(2 * t, 2)
         if n_rem * n_cand <= _FALLBACK_SMALL_PRODUCT:
             # tiny remainder: one exact round beats the doubling ladder
             width = max(bound, 2)
-        # One action per round, not two: the round's fused agg counts
-        # rows AND distinct resolved probes, so the remainder size is
-        # known arithmetically (a probe either resolves with its full
-        # tie set in a round or emits nothing) — no separate job to
-        # count the anti-join. The anti-join parent stays cached one
-        # extra round (`prev`) so the NEXT round's action materializes
-        # the (persisted) remainder against cached inputs, never from
-        # lineage back to the source join.
+        # One action per round: the fused agg counts rows AND settled
+        # probes (a probe settles with its whole answer in one round or
+        # emits nothing), so the remainder size is known without a job
+        # over the anti-join. The anti-join parent stays cached one
+        # extra round (`prev`) so the next round's action materializes
+        # the persisted remainder from cached inputs.
         prev: DataFrame | None = None
         for _ in range(_FALLBACK_MAX_ROUNDS):
             final = width >= bound
@@ -603,40 +600,19 @@ def _global_argmin_escalating(
             )
             if not final:
                 scored = scored.filter(F.col("dist") >= 0)
-            part = (
-                scored.withColumn("_min", F.min("dist").over(wf))
-                .filter(F.col("dist") == F.col("_min"))
-                .withColumn("tier", F.lit("poor"))
-                .select(*OUT_COLS)
-            )
-            part = _track(part)
+            part = _track(keep(scored, final))
             part_n, resolved = part.agg(
                 F.count(F.lit(1)), F.count_distinct("probe_id")
             ).first()
-            if _FALLBACK_DEBUG:  # pragma: no cover - diagnostics only
-                import sys as _sys
-                import time as _time
-
-                print(
-                    f"[fuzzy-fallback] width={width} final={final} "
-                    f"n_rem={n_rem} part_n={part_n} resolved={resolved} "
-                    f"t={_time.time():.2f}",
-                    file=_sys.stderr,
-                )
             parts.append(part)
-            # this action materialized `remaining`; its parent can go
             if prev is not None:
                 prev.unpersist()
                 prev = None
             if final:
-                # the band covered every pair and the DP was exact:
-                # every remaining probe resolved this round
                 break
             if part_n == 0:
-                # zero pairs kept: EVERY remaining distance exceeds the
-                # width — a disjoint probe domain. Jump straight to the
-                # guaranteed-final bound round instead of doubling
-                # through widths that will also keep nothing.
+                # nothing settled at this width: skip the widths that
+                # would also settle nothing and go to the exact round
                 width = max(bound, 2)
                 continue
             n_rem -= resolved
@@ -654,21 +630,18 @@ def _global_argmin_escalating(
             # never a shuffled CartesianProduct
             fb = matchable.crossJoin(F.broadcast(remaining))
             parts.append(
-                fb.withColumn("dist", F.levenshtein("_nq", "_nc").cast("long"))
-                .withColumn("_min", F.min("dist").over(wf))
-                .filter(F.col("dist") == F.col("_min"))
-                .withColumn("tier", F.lit("poor"))
-                .select(*OUT_COLS)
+                keep(fb.withColumn("dist", F.levenshtein("_nq", "_nc").cast("long")), True)
             )
 
         out = empty
         for part in parts:
             out = out.unionByName(part)
         # truncate lineage so the result survives the unpersist of every
-        # internal cache (the rows are the tiny fallback tie set)
+        # internal cache (the rows are the small settled answer set)
         return out.localCheckpoint(eager=True)
     finally:
-        _release()
+        for df in internal:
+            df.unpersist()
 
 
 def topk_fuzzy_join(
@@ -679,7 +652,6 @@ def topk_fuzzy_join(
     probe_val: str = "probe",
     cand_id: str = "cand_id",
     cand_val: str = "cand",
-    init_width: int = 8,
     broadcast_cand: bool = True,
     prepared: PreparedCandidates | None = None,
 ) -> DataFrame:
@@ -687,53 +659,33 @@ def topk_fuzzy_join(
     cand_id) — O2 top-k-with-ties generalized from the tiered join's
     global argmin, WITHOUT the cross join.
 
-    Same escalating-band scheme as ``_global_argmin_escalating``
-    (which is the k=1 all-ties case): round at width W scores only the
-    |len(nq)-len(nc)| <= W bucket pairs with the threshold DP
-    ``levenshtein(a, b, W)``. Every candidate outside the band or
-    rejected by the DP has dist > W; every survivor has dist <= W. So
-    if a probe has >= k survivors, its k-th smallest survivor distance
-    d_k <= W < any non-survivor distance — the round's top-k by
-    (dist, cand_id) is the GLOBAL top-k, finalized. Probes with fewer
-    than k survivors roll into the doubled width; the round at
-    W >= max normalized length covers every pair with a full DP, so
-    every probe resolves (probes with < k candidates total emit all of
-    them there).
-
-    Each round is a hash equi-join on a length bucket — at 100x data
-    this stays a shuffled (or broadcast) hash join per round, never the
-    O(P*C) full-DP cross product the naive rank() formulation pays.
+    Runs the ``poor`` fallback's escalation ladder (``_escalate``; the
+    fallback is its k=1 all-ties case) from width
+    ``_TOPK_START_WIDTH``: a probe with >= k survivors at width W has
+    its k-th smallest survivor distance d_k <= W < any non-survivor
+    distance, so the round's top-k by (dist, cand_id) is the GLOBAL
+    top-k. Probes with fewer than k survivors roll into the doubled
+    width; the exact final round emits every candidate of a probe with
+    fewer than k candidates in total.
 
     Returns probe_id, probe, cand_id, cand, dist (long), rnk (long,
     rank by (dist, cand_id) — dense since cand_id is unique).
-    Result rows are localCheckpoint-ed; every internal cache is
-    released before returning (same contract as the tiered fallback).
     """
-    spark = probe.sparkSession
-    from pyspark.sql import types as T
-
     p = _prep(probe, probe_id, probe_val, "probe_id", "probe", "_nq")
     c = prepared.c if prepared is not None else _prep(
         cand, cand_id, cand_val, "cand_id", "cand", "_nc"
     )
 
     out_cols = ["probe_id", "probe", "cand_id", "cand", "dist", "rnk"]
+    wr = Window.partitionBy("probe_id").orderBy("dist", "cand_id")
 
-    # Dense path (r18 optimization — the tiered join's dense gate,
-    # applied to top-k): when the candidate count is KNOWN (stats
-    # precomputed by the caller) and broadcast-small, the escalation
-    # ladder is all overhead — 2 stats aggregations, a persisted
-    # band-join round with its own action, and an eager localCheckpoint
-    # per call, where ONE broadcast nested-loop full-DP pass + ONE rank
-    # window is exactly the oracle's formulation and builds zero jobs
-    # (the plan stays lazy until the caller's action). Identical
-    # results: the ladder's exact final round scores the same full DP
-    # and the same (dist, cand_id) rank; probes/candidates whose
-    # normalized key is null are excluded on both paths. Scale
-    # contract: |probes| x n_cand DPs, bounded by the broadcast-small
-    # cap — above _DENSE_CAND_MAX the ladder below runs unchanged.
+    # Dense path: when the candidate count is KNOWN and broadcast-small,
+    # the ladder is all overhead (stats agg, a persisted round with its
+    # own action, an eager localCheckpoint). ONE broadcast nested-loop
+    # full-DP pass + ONE rank window is the oracle's formulation, builds
+    # zero jobs, and equals the ladder's exact final round; null keys
+    # are excluded on both paths.
     if prepared is not None and prepared.n_cand <= _DENSE_CAND_MAX:
-        wr = Window.partitionBy("probe_id").orderBy("dist", "cand_id")
         return (
             p.filter(F.col("_nq").isNotNull())
             .crossJoin(F.broadcast(prepared.matchable))
@@ -742,130 +694,28 @@ def topk_fuzzy_join(
             .filter(F.col("rnk") <= k)
             .select(*out_cols)
         )
-    schema = T.StructType(
-        [
-            p.schema["probe_id"],
-            p.schema["probe"],
-            c.schema["cand_id"],
-            c.schema["cand"],
-            T.StructField("dist", T.LongType()),
-            T.StructField("rnk", T.LongType()),
-        ]
+
+    wp = Window.partitionBy("probe_id")
+
+    def keep_topk(scored: DataFrame, final: bool) -> DataFrame:
+        ranked = scored.withColumn("rnk", F.rank().over(wr).cast("long"))
+        if final:
+            return ranked.filter(F.col("rnk") <= k).select(*out_cols)
+        return (
+            ranked.withColumn("_n", F.count(F.lit(1)).over(wp))
+            .filter((F.col("_n") >= F.lit(k)) & (F.col("rnk") <= k))
+            .select(*out_cols)
+        )
+
+    return _escalate(
+        p,
+        c,
+        prepared,
+        width=_TOPK_START_WIDTH,
+        broadcast_cand=broadcast_cand,
+        keep=keep_topk,
+        extra=T.StructField("rnk", T.LongType()),
     )
-    empty = spark.createDataFrame([], schema)
-
-    internal: list[DataFrame] = []
-
-    def _track(df: DataFrame) -> DataFrame:
-        df = df.persist()
-        internal.append(df)
-        return df
-
-    try:
-        remaining = _track(p.filter(F.col("_nq").isNotNull()))
-        n_rem, max_q = remaining.agg(
-            F.count(F.lit(1)), F.max(F.length("_nq"))
-        ).first()
-        if n_rem == 0:
-            return empty
-        if prepared is not None:
-            # caller-owned persisted frame + precomputed stats: not
-            # _track-ed (the registry that created it unpersists it)
-            matchable = prepared.matchable
-            n_cand, max_c = prepared.n_cand, prepared.max_c
-        else:
-            matchable = _track(c.filter(F.col("_nc").isNotNull()))
-            n_cand, max_c = matchable.agg(
-                F.count(F.lit(1)), F.max(F.length("_nc"))
-            ).first()
-        if n_cand == 0:
-            return empty
-        # dist(q, c) <= max(|q|, |c|): a round at this width is exact
-        # and covers every pair — the guaranteed-final round
-        bound = max(max_q or 0, max_c or 0)
-
-        wr = Window.partitionBy("probe_id").orderBy("dist", "cand_id")
-        wp = Window.partitionBy("probe_id")
-        parts: list[DataFrame] = []
-        width = max(init_width, 2)
-        if n_rem * n_cand <= _FALLBACK_SMALL_PRODUCT:
-            # tiny remainder: one exact round beats the doubling ladder
-            width = max(bound, 2)
-        prev: DataFrame | None = None
-        for _ in range(_FALLBACK_MAX_ROUNDS):
-            final = width >= bound
-            pairs = _bucketed_band_pairs(remaining, matchable, width, broadcast_cand)
-            scored = pairs.withColumn(
-                "dist",
-                (
-                    F.levenshtein("_nq", "_nc")
-                    if final
-                    else F.levenshtein("_nq", "_nc", width)
-                ).cast("long"),
-            )
-            if not final:
-                scored = scored.filter(F.col("dist") >= 0)
-            ranked = scored.withColumn("rnk", F.rank().over(wr).cast("long")).withColumn(
-                "_n", F.count(F.lit(1)).over(wp)
-            )
-            resolved_pred = (
-                F.lit(True) if final else F.col("_n") >= F.lit(k)
-            )
-            part = _track(
-                ranked.filter(resolved_pred & (F.col("rnk") <= k)).select(*out_cols)
-            )
-            # one action per round (see _global_argmin_escalating): the
-            # fused agg yields the row count AND how many probes
-            # resolved, so the remainder size is known without a
-            # second job over the anti-join; the parent cache is held
-            # one extra round so the next action materializes the
-            # persisted remainder against cached inputs
-            part_n, resolved = part.agg(
-                F.count(F.lit(1)), F.count_distinct("probe_id")
-            ).first()
-            parts.append(part)
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            if final:
-                break
-            if part_n == 0:
-                # nothing reached k survivors: skip widths that would
-                # also fall short and go straight to the exact round
-                width = max(bound, 2)
-                continue
-            n_rem -= resolved
-            if n_rem == 0:
-                break
-            nxt = _track(
-                remaining.join(
-                    part.select("probe_id").distinct(), "probe_id", "left_anti"
-                )
-            )
-            prev = remaining
-            remaining = nxt
-            width = min(width * 2, max(bound, 2))
-        else:
-            # capped remainder (unreachable unless bound > 2^8 *
-            # init_width): exact scan with the small probe side
-            # broadcast — map-side nested loop, never a shuffled
-            # CartesianProduct
-            fb = matchable.crossJoin(F.broadcast(remaining))
-            parts.append(
-                fb.withColumn("dist", F.levenshtein("_nq", "_nc").cast("long"))
-                .withColumn("rnk", F.rank().over(wr).cast("long"))
-                .filter(F.col("rnk") <= k)
-                .select(*out_cols)
-            )
-
-        out = empty
-        for part in parts:
-            out = out.unionByName(part)
-        return out.localCheckpoint(eager=True)
-    finally:
-        for df in internal:
-            df.unpersist()
-        internal.clear()
 
 
 def fuzzy_match_summary(tiers: DataFrame) -> DataFrame:

@@ -172,7 +172,6 @@ def ivf_topk(
     nprobe: int = 5,
     n_assign: int = 2,
     centroids: DataFrame | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """IVF-style ANN: a coarse quantizer partitions candidates into
     cells; probes search only their ``nprobe`` nearest cells.
@@ -213,16 +212,6 @@ def ivf_topk(
         )
     )
     cents = base.withColumn("_ncent", dot("vec_cent", "vec_cent"))
-    # r18 (optimization): the centroid table feeds TWO broadcast builds
-    # (candidate cell assignment + probe routing); without a persist
-    # each build re-derives it — for the default stride sample that
-    # means re-scanning the FULL candidate table per build, the cost
-    # that matters when cands is the 100 TB corpus. The table itself is
-    # |cands|/stride rows (tiny, the broadcastability invariant), so
-    # the persist is sketch-sized state.
-    if cache_registry is not None:
-        cents = cents.persist()
-        cache_registry.append(cents)
     cell = nearest_centroid_cells(cands, cents, "cand_id", "vec_c", n_assign).select(
         "cand_id", "cent_id"
     )

@@ -519,7 +519,6 @@ def gram_tfidf_cosine_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
     cache_registry: list | None = None,
-    persist_tf: bool = False,
 ) -> DataFrame:
     """Sparse TF-IDF cosine top-k document similarity over the 3-token
     gram vocabulary — the text-side counterpart of the embedding ANN
@@ -559,21 +558,6 @@ def gram_tfidf_cosine_topk(
     tf = grams.groupBy("doc_id", "gram").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
-    # r19 (optimization, measured then gated OFF locally — the ivf_topk
-    # r18 protocol): tf feeds THREE subtrees of the weight table — the
-    # weights themselves plus the dfreq and n_docs broadcast builds —
-    # and without a persist each build re-runs the scan + tokenize +
-    # gram explode + tf aggregation from parquet (three identical
-    # Scan→Generate→HashAggregate chains in the r18 plan dump). At
-    # harness scale the recompute is CHEAPER than the materialization:
-    # same-session interleaved min-of-6 read persist 3.69 s vs lazy
-    # 3.31 s median at sf0.1 (240k tiny rows — cache write + one extra
-    # job beat two trivial recomputes). At corpus scale the two extra
-    # full scan+tokenize+explode passes dominate, so ``persist_tf=True``
-    # is the production setting.
-    if persist_tf and cache_registry is not None:
-        tf = tf.persist()
-        cache_registry.append(tf)
     # corpus size rides a broadcast one-row frame (no driver-side
     # count() action — the plan stays fully lazy and distributed)
     n_docs = tf.agg(

@@ -199,17 +199,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recall@5 0.79 -> 0.86 @ sf0.1 at 1.55x scored pairs); trained
     k-means centroids re-measured as a negative at sf0.1 with the
     probe-coincidence confound controlled, so the sampled quantizer
-    stays (bench_history/ivf_centroid_sweep_r11.json).
-
-    r18 (optimization note): ivf_topk grew a ``cache_registry`` hook
-    that persists the centroid table across its two broadcast builds —
-    the right call when ``cands`` is a full corpus (each build
-    otherwise re-scans it for the stride sample). NOT used here: a
-    same-session interleaved A/B at sf0.1 measured the persist as a
-    ~15% cost (min 2.22 s uncached vs 2.57 s cached — cache
-    materialization + InMemoryRelation broadcast overhead exceed the
-    trivial 2000-row recompute), so the local default stays uncached
-    and the hook is the documented at-scale knob."""
+    stays (bench_history/ivf_centroid_sweep_r11.json)."""
     from ..operators.similarity import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -65,6 +65,22 @@ def _driver_mem() -> str:
     return f"{max(2048, min(16384, phys_mb // 4))}m"
 
 
+def _jobs_launched(spark, call) -> int:
+    """Spark jobs launched while ``call()`` runs, by job-id range in the
+    status store (streaming epochs run under the query's own job group,
+    so a count by group would miss them)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max(jobs.apply(i).jobId() for i in range(jobs.size())) if jobs.size() else -1
+
+    first = last_job()
+    call()
+    return last_job() - first
+
+
 @pytest.fixture(scope="session")
 def spark():
     from data_finder_comparator_spark.session import get_spark

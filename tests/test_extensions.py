@@ -1191,6 +1191,17 @@ def test_kmeans_dense_matches_flattened(spark):
     assert old == new
 
 
+def test_kmeans_dense_rejects_zero_iterations(spark):
+    """No Lloyd round means no centroids to return: a clear ValueError,
+    not a crash on the unset round result."""
+    from data_finder_comparator_spark.operators.clustering import kmeans_lloyd_dense
+
+    vecs = spark.createDataFrame([(0, [1.0, 2.0])], "vec_id long, embedding array<float>")
+    for iterations in (0, -1):
+        with pytest.raises(ValueError, match="iterations must be >= 1"):
+            kmeans_lloyd_dense(vecs, "vec_id", "embedding", k=1, dims=2, iterations=iterations)
+
+
 def test_connected_components_paths_agree(spark):
     """The single-task union-find fast path and the iterative
     label-propagation scale path must produce identical labels —

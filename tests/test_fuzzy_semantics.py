@@ -209,6 +209,71 @@ def test_topk_fewer_candidates_than_k(spark):
     assert sorted((r.cand_id, r.dist, r.rnk) for r in out) == [(10, 1, 1), (11, 3, 2)]
 
 
+# Forced escalation ladder: every other fixture is under
+# _FALLBACK_SMALL_PRODUCT and resolves in one exact round. With t=4
+# both ladders run widths 8, 16, 32 and the final round at the bound
+# 36. Probes share no character with the candidates, so a probe's
+# distance to a candidate is the longer length, every probe is farther
+# than t from every candidate, and the argmin ties are every candidate
+# no longer than the probe. "mixed" settles one probe per width; "far"
+# settles nothing in the first round, so the ladder jumps to the bound.
+# Four rounds at most: each round's remainder nests the previous one
+# twice, so the plan text AQE renders doubles with every round.
+_LADDER_CANDS = [
+    (100 + i, s)
+    for i, s in enumerate(
+        ["a", "abc", "abcabc", "aabbccdd", "abcdefghij", "a" * 16, "bc" * 12, "abc" * 12]
+    )
+]
+_LADDER_PROBES = {
+    "mixed": [(1, "z" * 7), (2, "q" * 13), (3, "x" * 30), (4, "x" * 34)],
+    "far": [(1, "x" * 30), (2, "y" * 34)],
+}
+# Jobs each call launches (build plus collect), by job-id range.
+_LADDER_JOBS = {
+    ("mixed", False): {"broadcast": 36, "band": 42, "topk": 34},
+    ("mixed", True): {"broadcast": 22, "band": 25, "topk": 17},
+    ("far", False): {"broadcast": 22, "band": 25, "topk": 17},
+    ("far", True): {"broadcast": 20, "band": 22, "topk": 14},
+}
+
+
+@pytest.mark.parametrize("capped", [False, True], ids=["doubling", "capped"])
+@pytest.mark.parametrize("probes", ["mixed", "far"])
+def test_forced_ladder_matches_brute_force(spark, monkeypatch, probes, capped):
+    """The escalation ladder's doubling rounds, its jump to the bound
+    and its capped-remainder nested loop must give the brute-force
+    answer for the tier join (broadcast and band) and for top-k, with
+    the same number of Spark jobs as the pinned counts."""
+    from data_finder_comparator_spark.operators import fuzzy_join as fj
+    from tests.conftest import _jobs_launched
+    from tests.test_property_fuzzy import _brute_tiers
+
+    monkeypatch.setattr(fj, "_FALLBACK_SMALL_PRODUCT", 0)
+    if capped:
+        monkeypatch.setattr(fj, "_FALLBACK_MAX_ROUNDS", 1)
+    probe_rows = _LADDER_PROBES[probes]
+    probe = spark.createDataFrame(probe_rows, "probe_id long, probe string")
+    cand = spark.createDataFrame(_LADDER_CANDS, "cand_id long, cand string")
+    calls = {
+        "broadcast": lambda: fj.tiered_fuzzy_join(probe, cand, threshold=4),
+        "band": lambda: fj.tiered_fuzzy_join(probe, cand, threshold=4, strategy="band"),
+        "topk": lambda: fj.topk_fuzzy_join(probe, cand, k=3),
+    }
+    jobs = {}
+    for name, call in calls.items():
+        rows = []
+        jobs[name] = _jobs_launched(spark, lambda: rows.extend(call().collect()))
+        if name == "topk":
+            got = {(r.probe_id, r.cand_id, r.dist, r.rnk) for r in rows}
+            assert got == _brute_topk(probe_rows, _LADDER_CANDS, 3)
+        else:
+            got = {(r.probe_id, r.cand_id, r.dist, r.tier) for r in rows}
+            assert got == _brute_tiers(probe_rows, _LADDER_CANDS, 4), name
+            assert {r.tier for r in rows} == {"poor"}
+    assert jobs == _LADDER_JOBS[probes, capped]
+
+
 def test_topk_dense_prepared_path_matches_brute_force(spark):
     """r18: the dense broadcast top-k path (prepared candidates under
     the broadcast-small cap) must equal the full-rank answer — same

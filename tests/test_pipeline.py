@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_finder_comparator_spark.config import EngineConfig
 from data_finder_comparator_spark.pipeline import read_folder, run_find_compare
+from tests.conftest import _jobs_launched
 
 
 def _write_fixtures(spark, tmp_path):
@@ -228,22 +229,6 @@ def test_streaming_releases_prepared_catalog(spark, tmp_path):
             ),
         )
     assert _cache_entries(spark) == before
-
-
-def _jobs_launched(spark, call) -> int:
-    """Spark jobs launched while ``call()`` runs, by job-id range in the
-    status store (streaming epochs run under the query's own job group,
-    so a count by group would miss them)."""
-    sc = spark.sparkContext._jsc.sc()
-
-    def last_job() -> int:
-        sc.listenerBus().waitUntilEmpty()
-        jobs = sc.statusStore().jobsList(None)
-        return max(jobs.apply(i).jobId() for i in range(jobs.size())) if jobs.size() else -1
-
-    first = last_job()
-    call()
-    return last_job() - first
 
 
 # Job-count floor of a streamed run_find_compare against a small catalog,
