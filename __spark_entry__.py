@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from data_finder_comparator_spark.plans.catalog import (  # noqa: E402
     ORACLES,
     QUERIES,
+    driver_names,
     release_caches,
 )
 
@@ -46,10 +47,10 @@ def _released(fn: Callable[[SparkSession, str], DataFrame]):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: _released(fn) for name, fn in QUERIES.items()}
+    return {name: _released(QUERIES[name]) for name in driver_names()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL per query (omitted for genuinely
     non-SQL-expressible ops → driver falls back to rows-only check)."""
-    return dict(ORACLES)
+    return {name: ORACLES[name] for name in driver_names() if name in ORACLES}

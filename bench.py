@@ -19,19 +19,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_finder_comparator_spark.plans.catalog import QUERIES  # noqa: E402
+from data_finder_comparator_spark.plans.catalog import (  # noqa: E402
+    QUERIES,
+    driver_names,
+)
 from data_finder_comparator_spark.session import get_spark  # noqa: E402
 
-# r17 (r16 verdict item 4): the bench list IS the registry. The old
-# curated list silently skipped 11 registered rows (recounted r18 from
-# the archives: the 13 first-ever numbers in r17_builder.json are
-# those 11 plus the 2 rows newly registered in r17) — including
-# json_folder_roundtrip, whose cost profile changed in r16 (the
-# loss-free inference probe's second pass) without ever being
-# measured. Deriving from QUERIES means a registered row can never be
-# cost-invisible again. Retired queries leave the bench with their
-# registry slot, as before.
-HEADLINE = list(QUERIES)
+# The bench times exactly the queries the driver runs.
+HEADLINE = driver_names()
 
 
 def main() -> None:

@@ -33,7 +33,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     from data_finder_comparator_spark.plans.catalog import (
         QUERIES,
-        RETIRED,
         release_caches,
     )
     from data_finder_comparator_spark.session import get_spark
@@ -41,9 +40,7 @@ def main() -> None:
     spark = get_spark(app_name="plan-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
-    # RETIRED queries (r12) stay part of the engine and of the
-    # zero-Cartesian invariant — sweep them too
-    for name, fn in {**QUERIES, **RETIRED}.items():
+    for name, fn in QUERIES.items():
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()

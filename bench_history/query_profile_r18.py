@@ -29,6 +29,7 @@ def main() -> None:
     only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
     from data_finder_comparator_spark.plans.catalog import (
         QUERIES,
+        driver_names,
         release_caches,
     )
     from data_finder_comparator_spark.session import get_spark
@@ -47,7 +48,7 @@ def main() -> None:
 
     # warmup to JIT the stack so the first profiled query isn't billed
     # for class loading
-    names = [n for n in QUERIES if only is None or n in only]
+    names = [n for n in driver_names() if only is None or n in only]
     try:
         QUERIES[names[0]](spark, "/root/testdata/sf0.001").count()
         release_caches()

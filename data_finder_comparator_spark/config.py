@@ -22,6 +22,8 @@ from __future__ import annotations
 import json
 from dataclasses import asdict, dataclass, field
 
+from .operators.fuzzy_join import STRATEGIES
+
 
 @dataclass(frozen=True)
 class EngineConfig:
@@ -41,7 +43,7 @@ class EngineConfig:
     def __post_init__(self) -> None:
         if self.threshold < 0:
             raise ValueError(f"threshold must be >= 0, got {self.threshold}")
-        if self.strategy not in ("broadcast", "band", "qgram"):
+        if self.strategy not in STRATEGIES:
             raise ValueError(f"unknown strategy {self.strategy!r}")
 
     def to_json(self) -> str:

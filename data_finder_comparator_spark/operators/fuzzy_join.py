@@ -60,6 +60,7 @@ from ..functions.normalize import norm_key
 from ..partitioning import fanout_partitions as _fanout_partitions
 
 OUT_COLS = ["probe_id", "probe", "cand_id", "cand", "dist", "tier"]
+STRATEGIES = ("broadcast", "band", "qgram")
 
 
 def _prep(df: DataFrame, id_col: str, val_col: str, out_id: str, out_val: str, nrm: str) -> DataFrame:
@@ -166,6 +167,10 @@ def tiered_fuzzy_join(
     aggregations — the same price as the stats job the escalation
     fallback already pays.
     """
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown strategy {strategy!r}, expected one of {STRATEGIES}")
+    if threshold < 0:
+        raise ValueError(f"threshold must be >= 0, got {threshold}")
     t = threshold
     p = _prep(probe, probe_id, probe_val, "probe_id", "probe", "_nq")
     # ``prepared`` (see prepare_candidates) skips the per-call candidate
@@ -671,6 +676,8 @@ def topk_fuzzy_join(
     Returns probe_id, probe, cand_id, cand, dist (long), rnk (long,
     rank by (dist, cand_id) — dense since cand_id is unique).
     """
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     p = _prep(probe, probe_id, probe_val, "probe_id", "probe", "_nq")
     c = prepared.c if prepared is not None else _prep(
         cand, cand_id, cand_val, "cand_id", "cand", "_nc"

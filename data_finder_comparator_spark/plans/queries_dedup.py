@@ -16,7 +16,7 @@ from ..operators.dedup import (
     simhash32,
 )
 from ..sources.parquet import load_table
-from .catalog import CACHES, query, retired_query, track
+from .catalog import CACHES, query, track
 
 _NORM = "regexp_replace(lower(text), '[^a-z0-9]', '', 'g')"
 
@@ -217,12 +217,8 @@ WHERE inter_n * 4 >= (sa.n + sb.n - inter_n) * 1
 """
 
 
-# RETIRED r17 (capacity, r16 verdict item 7): the df-capped variant of
-# dedup_ngram_jaccard — same shingle/Jaccard semantics, the cap is the
-# scale escape hatch. The operator keeps driver evidence through
-# dedup_ngram_jaccard itself; the capped path stays hash-checked here
-# on every pytest run. Its slot carries media_folder_decode.
-@retired_query("dedup_ngram_jaccard_capped", oracle=_JACCARD_CAPPED_ORACLE)
+# Not driven: df-capped variant of dedup_ngram_jaccard (same semantics).
+@query("dedup_ngram_jaccard_capped", oracle=_JACCARD_CAPPED_ORACLE, driver=False)
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import drop_hot_shingles
 
@@ -496,17 +492,10 @@ def _hll_finalize(reg: DataFrame) -> DataFrame:
     )
 
 
-@retired_query("hll_distinct_sketch", oracle=_HLL_ORACLE)
+# Not driven: hll_merge_shards drives the same sketch.
+@query("hll_distinct_sketch", oracle=_HLL_ORACLE, driver=False)
 def hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14: its driver slot was
-    displaced by the streaming queries returning in-window with the
-    UTC-pin/drain-consolidation fixes (the rotation rule). Redundant by
-    construction: the HLL operator keeps ``grouped_hll_by_lang``
-    (per-group sketches — a strict superset of the single global
-    sketch) and ``hll_merge_shards`` (shard merges) as driver rows.
-    Hash-checked vs DuckDB on every pytest run.
-
-    Deterministic HLL (p=8) over document texts: md5 -> 60-bit value
+    """Deterministic HLL (p=8) over document texts: md5 -> 60-bit value
     -> (register, leading-zero rank) map-side, max per register, integer
     -scaled harmonic sum, one closing division. Returns the full
     register table (the mergeable sketch state) with the zero-register
@@ -521,11 +510,8 @@ def hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hll_finalize(reg)
 
 
-# RETIRED r12 (driver-window capacity, see catalog.py): HLL keeps three
-# registered driver rows (hll_distinct_sketch, hll_merge_shards,
-# grouped_hll_by_lang) and stream/batch sketch equivalence stays pinned
-# here against the SAME oracle on every pytest run.
-@retired_query("hll_register_stream", oracle=_HLL_ORACLE)
+# Not driven: streamed form of hll_distinct_sketch, same oracle.
+@query("hll_register_stream", oracle=_HLL_ORACLE, driver=False)
 def hll_register_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HLL distinct-text sketch maintained over a document STREAM:
     per micro-batch, the batch's register partials (<=256 tiny rows)
@@ -680,12 +666,8 @@ FROM e
 """
 
 
-# RETIRED r17 (capacity, r16 verdict item 7): the grouped strategy
-# variant of the HLL sketch — hll_merge_shards keeps the sketch algebra
-# (shard build + register-wise merge) under driver evidence; the
-# grouped form stays hash-checked here on every pytest run. Its slot
-# carries mixed_folder_any.
-@retired_query("grouped_hll_by_lang", oracle=_GROUPED_HLL_ORACLE)
+# Not driven: per-group variant of the sketch hll_merge_shards drives.
+@query("grouped_hll_by_lang", oracle=_GROUPED_HLL_ORACLE, driver=False)
 def grouped_hll_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language HLL distinct-text estimate: same 2^50 integer-scaled
     register arithmetic as hll_distinct_sketch, grouped on lang at

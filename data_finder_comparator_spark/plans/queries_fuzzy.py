@@ -21,7 +21,7 @@ from ..operators.fuzzy_join import (
     topk_fuzzy_join,
 )
 from ..sources.parquet import load_table
-from .catalog import CACHES, query, retired_query
+from .catalog import CACHES, query
 
 NORM_DUCK = "regexp_replace(lower({c}), '[^a-z0-9]', '', 'g')"
 
@@ -203,14 +203,11 @@ def fuzzy_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED r12 (driver-window capacity, see catalog.py): the band
-# strategy stays pytest-hash-checked against the SAME oracle as the
-# registered fuzzy_join_docs — strategy equivalence is still machine-
-# verified every run, just not driver-run.
-@retired_query("fuzzy_join_docs_band", oracle=_DOCS_ORACLE)
+# Not driven: band-strategy variant of fuzzy_join_docs, same oracle.
+@query("fuzzy_join_docs_band", oracle=_DOCS_ORACLE, driver=False)
 def fuzzy_join_docs_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same query, length-band blocking — strategy equivalence verified
-    at the driver level: both variants must hash-match the ONE oracle."""
+    """Same query, length-band blocking — strategy equivalence: both
+    variants must hash-match the ONE oracle."""
     docs = load_table(spark, sf_dir, "documents")
     probes = docs.filter(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("probe_id"), F.substring("text", 1, 24).alias("probe")
@@ -389,15 +386,11 @@ def streaming_fuzzy_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query("fuzzy_tier_counts", oracle=_TIER_COUNTS_ORACLE)
+# Not driven: a count over fuzzy_join_tiers, which is driven.
+@query("fuzzy_tier_counts", oracle=_TIER_COUNTS_ORACLE, driver=False)
 def fuzzy_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed streaming/lakehouse returns plus the
-    net-new stream row — the rotation rule). Redundant by construction:
-    it is a count over ``fuzzy_join_tiers``'s output, whose driver row
-    it keeps, the A2 count shape keeps ``curation_counts``, and the
-    fuzzy family keeps five other driver rows. Hash-checked vs DuckDB
-    on every pytest run."""
+    """Pairs, distinct probes and distance range per tier of
+    ``fuzzy_join_tiers``."""
     tiers = fuzzy_join_tiers(spark, sf_dir)
     return tiers.groupBy("tier").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),

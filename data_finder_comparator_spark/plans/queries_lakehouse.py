@@ -13,20 +13,14 @@ state (anti-join + union + filter), so the commit log, the clustered
 write layout, the Bloom/footer file-skipping stack and the snapshot
 reader are all under the driver's hash check, not just pytest.
 
-Shared build (r14, closing the r13 verdict's item 5): the three
-snapshot rows — engine reader, DSv2 reader, DSv2 + pushdown —
-deliberately read the SAME append→MERGE→DELETE table, so the build
-lives in ONE helper (``_built_merge_table``) memoized per
-(process, sf_dir). Until r13 each query owned its build verbatim so a
-parked sibling's code stayed byte-stable; that bought nothing in
-practice — every engine-level TransactionalTable change pulls ALL the
-lakehouse rows in-window at once (r13's late audit and r14's pointer
-fix both did), so the trio already rotates as a unit. The helper cuts
-~160 triplicated lines and two of the three identical ~5 s lifecycle
-builds from every driver/bench pass; lifecycle coverage is unchanged —
-the first row to run executes append/merge/delete under the driver's
-hash, and a torn or missing table rebuilds from scratch (the memo
-validates head version before reuse).
+Shared build: the three snapshot rows — engine reader, DSv2 reader,
+DSv2 + pushdown — deliberately read the SAME append→MERGE→DELETE
+table, so the build lives in ONE helper (``_built_merge_table``)
+memoized per (process, sf_dir), saving two of the three identical ~5 s
+lifecycle builds per driver/bench pass. The first row to run executes
+append/merge/delete under the driver's hash, and a torn or missing
+table rebuilds from scratch (the memo validates head version before
+reuse).
 """
 
 from __future__ import annotations
@@ -191,7 +185,7 @@ def lakehouse_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_datasource(spark: SparkSession) -> None:
     """Idempotent ``lakehouse`` format registration for this session
     (the Python Data Source registry tolerates re-registration, but a
-    per-session guard keeps the driver's 50-query loop from re-shipping
+    per-session guard keeps the driver's query loop from re-shipping
     the class every call)."""
     if not getattr(spark, "_lakehouse_ds_registered", False):
         from ..sources.lakehouse_source import LakehouseDataSource

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.parquet import load_table
-from .catalog import query, retired_query
+from .catalog import query
 
 # ---------------------------------------------------------------------------
 # Q1-style pricing summary: the canonical partial-agg + tiny-shuffle shape.
@@ -132,16 +132,10 @@ FROM (
 """
 
 
-@retired_query("topk_orders_per_priority", oracle=_TOPK_ORDERS_ORACLE)
+# Not driven: fuzzy_topk drives per-group top-k with ties.
+@query("topk_orders_per_priority", oracle=_TOPK_ORDERS_ORACLE, driver=False)
 def topk_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: per-group top-k with
-    ties keeps ``fuzzy_topk``'s driver row (the banded escalating
-    form), and the rank-window shape rides every fuzzy tier query's
-    single window pass. Hash-checked vs DuckDB on every pytest run.
-
-    Top-5 orders by price per priority class. rank() keeps ties like
+    """Top-5 orders by price per priority class. rank() keeps ties like
     the reference's best-tier semantics; deterministic tiebreak on key.
     One shuffle on the partition key; at scale AQE handles skewed
     priorities."""
@@ -175,14 +169,11 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
 
 
-@retired_query("orders_rollup", oracle=_ROLLUP_ORACLE)
+# Not driven: prefix case of orders_grouping_sets, which is driven.
+@query("orders_rollup", oracle=_ROLLUP_ORACLE, driver=False)
 def orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: ROLLUP is the prefix
-    special case of GROUPING SETS, whose general form keeps
-    ``orders_grouping_sets``'s driver row over the same table.
-    Hash-checked vs DuckDB on every pytest run."""
+    """Order count and total price per (status, priority) ROLLUP; the
+    subtotal rows carry 'ALL'."""
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
@@ -214,16 +205,10 @@ WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
 """
 
 
-@retired_query("customers_without_orders", oracle=_ANTI_ORACLE)
+# Not driven: decontaminate_overlap drives the anti-join shape.
+@query("customers_without_orders", oracle=_ANTI_ORACLE, driver=False)
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: the left-anti-join shape
-    keeps ``decontaminate_overlap`` (anti-join on content keys) and
-    ``bloom_decontaminate`` (its sketch-accelerated form) as driver
-    rows. Hash-checked vs DuckDB on every pytest run.
-
-    Positive-balance customers with no 1998+ order — NOT EXISTS as a
+    """Positive-balance customers with no 1998+ order — NOT EXISTS as a
     left anti join; the date filter pushes below the join to the orders
     scan."""
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0)
@@ -286,14 +271,11 @@ HAVING count(*) > 1
 """
 
 
-@retired_query("suppliers_by_nation", oracle=_SUPPLIER_ORACLE)
+# Not driven: revenue_by_nation drives the same dim-join + agg shape.
+@query("suppliers_by_nation", oracle=_SUPPLIER_ORACLE, driver=False)
 def suppliers_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: broadcast dim join +
-    group-agg keeps ``revenue_by_nation``'s driver row (same shape,
-    richer aggregate over a bigger fact side). Hash-checked vs DuckDB
-    on every pytest run."""
+    """Supplier count and account-balance total per nation with more than
+    one supplier: broadcast dimension join + group aggregate."""
     sup = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     return (
@@ -324,17 +306,10 @@ FROM events GROUP BY event_type
 """
 
 
-@retired_query("event_value_quantiles", oracle=_QUANTILES_ORACLE)
+# Not driven: exact form of histogram_quantiles, which is driven.
+@query("event_value_quantiles", oracle=_QUANTILES_ORACLE, driver=False)
 def event_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: the quantile family
-    keeps ``histogram_quantiles``'s driver row — the mergeable-sketch
-    form that is also the documented 100 TB path; the exact sort-based
-    form stays hash-checked here. Hash-checked vs DuckDB on every
-    pytest run.
-
-    Exact p50/p95 of event value per type. Exact percentile needs the
+    """Exact p50/p95 of event value per type. Exact percentile needs the
     group's values together (sort-based agg); at 100 TB you'd reach for
     approx_percentile (t-digest, mergeable partial aggs) — kept exact
     here because the oracle must match bit-for-bit."""
@@ -360,10 +335,8 @@ GROUP BY CUBE (event_type, hour(ts))
 """
 
 
-# RETIRED r12 (driver-window capacity, see catalog.py): CUBE is the
-# grouping-sets special case already driver-evidenced by
-# orders_grouping_sets (superset) and orders_rollup; pytest-hash-checked.
-@retired_query("events_cube", oracle=_CUBE_ORACLE)
+# Not driven: grouping-sets case of orders_grouping_sets, which is driven.
+@query("events_cube", oracle=_CUBE_ORACLE, driver=False)
 def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (event_type, hour-of-day): Catalyst expands the four
     grouping sets into one Expand + single-shuffle aggregate — the
@@ -645,17 +618,10 @@ GROUP BY a.win_id
 """
 
 
-@retired_query("purchase_window_stats", oracle=_RANGE_ORACLE)
+# Not driven: rolling_user_activity drives range-frame aggregation.
+@query("purchase_window_stats", oracle=_RANGE_ORACLE, driver=False)
 def purchase_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: anchored event-time
-    range aggregation keeps ``rolling_user_activity`` (range-frame
-    windows) and ``streaming_purchase_attribution`` (the same
-    purchase-anchored lookback as a stream-stream join) as driver
-    rows. Hash-checked vs DuckDB on every pytest run.
-
-    Each anchored purchase opens a [ts, ts+30min) window; count and
+    """Each anchored purchase opens a [ts, ts+30min) window; count and
     sum all event activity inside it. Inner chunked join + group-by,
     then a left join back to the anchors resurrects zero-activity
     windows (count 0, sum NULL — matching SQL LEFT JOIN semantics)."""
@@ -761,14 +727,11 @@ GROUP BY 1, 2
 """
 
 
-@retired_query("session_type_cooccurrence", oracle=_COOCCUR_ORACLE)
+# Not driven: composes sessionize_events and event_funnel, both driven.
+@query("session_type_cooccurrence", oracle=_COOCCUR_ORACLE, driver=False)
 def session_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: the sessionize-then-
-    analyze shape keeps ``sessionize_events`` (the session builder) and
-    ``event_funnel`` (ordered event-pair analysis) as driver rows; this
-    row composes the two. Hash-checked vs DuckDB on every pytest run."""
+    """Sessions per co-occurring event-type pair: sessionize each user's
+    events on a gap window, then pair the distinct types per session."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag(F.col("ts")).over(w)
@@ -1196,18 +1159,10 @@ def _grouped_quantile_bins(spark: SparkSession, ev: DataFrame, quantiles):
     return sel, bounds
 
 
-@retired_query("grouped_histogram_quantiles", oracle=_GROUPED_HISTQ_ORACLE)
+# Not driven: per-group variant of histogram_quantiles, which is driven.
+@query("grouped_histogram_quantiles", oracle=_GROUPED_HISTQ_ORACLE, driver=False)
 def grouped_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r13: its driver slot was
-    displaced by ``excel_folder_roundtrip`` returning in-window (its
-    read path's column typing changed this round — the rotation rule).
-    Redundant by construction: the histogram-sketch operator keeps
-    ``histogram_quantiles`` (ungrouped) and ``histogram_merge_shards``
-    (shard merges), and the per-group-sketch shape keeps
-    ``grouped_hll_by_lang``. Hash-checked vs DuckDB on every pytest
-    run.
-
-    p50/p90/p99 per event_type from per-group equi-width histograms.
+    """p50/p90/p99 per event_type from per-group equi-width histograms.
     The per-group bounds table is group-cardinality-sized, so it
     broadcasts; the cumulative walk windows on (event_type, bin) with
     at most 4096 rows per partition."""
@@ -1246,16 +1201,10 @@ FROM shard GROUP BY bin
 """
 
 
-@retired_query("histogram_merge_shards", oracle=_HIST_MERGE_ORACLE)
+# Not driven: hll_merge_shards drives the shard-merge sketch shape.
+@query("histogram_merge_shards", oracle=_HIST_MERGE_ORACLE, driver=False)
 def histogram_merge_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the driver registry in r13, displaced by
-    ``lakehouse_pushdown_snapshot`` (the DSv2 filter-pushdown reader's
-    first driver row). Redundant by construction: the shard-merge
-    sketch shape keeps ``hll_merge_shards``'s driver row and the
-    histogram family keeps ``histogram_quantiles``'s. Hash-checked vs
-    DuckDB on every pytest run.
-
-    Per-shard histograms on a pinned global grid, merged by cell
+    """Per-shard histograms on a pinned global grid, merged by cell
     sum (integer-exact, associative). Shard state through every
     exchange is <=4096 cells — the fixed-size merge the sketches exist
     for."""

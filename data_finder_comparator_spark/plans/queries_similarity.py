@@ -12,7 +12,7 @@ from ..operators.similarity import (
     lsh_bucketed_topk,
 )
 from ..sources.parquet import load_table
-from .catalog import query, retired_query
+from .catalog import query
 
 # DuckDB double-precision cosine with the same formula/rounding as the
 # Spark side: dot / sqrt(norm_a * norm_b), rounded to 6 dp.
@@ -360,18 +360,10 @@ FROM (
 """
 
 
-@retired_query("ivf_pq_topk", oracle=_IVF_PQ_ORACLE)
+# Not driven: build-in-query form of ivf_pq_build_serve_roundtrip.
+@query("ivf_pq_topk", oracle=_IVF_PQ_ORACLE, driver=False)
 def ivf_pq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r13 (verdict item 2):
-    the build-in-query cost shape this row documented — re-encoding
-    every candidate per query — was obsoleted by the r12 index
-    lifecycle split, and its driver slot now carries
-    ``ivf_pq_build_serve_roundtrip``, which exercises the build ONCE +
-    serve path under the SAME oracle. This form stays hash-checked vs
-    DuckDB on every pytest run (test_retired_oracle_parity).
-
-    FAISS-style IVF-PQ ANN, driver-registered in r11 (it was
-    pytest-gated since r10; the oracle above is the full DuckDB
+    """FAISS-style IVF-PQ ANN (the oracle above is the full DuckDB
     restatement `test_ivf_pq_topk_oracle_ready` proves hash parity
     against): coarse-cell routing prunes pairs, m=8 subspace product
     quantization scores them from byte codes via decimal-stabilized
@@ -464,9 +456,9 @@ def ivf_pq_build_serve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     120-deep shortlist. No candidate is encoded after the build
     commits (plan-pinned by test_ivf_pq_roundtrip_serves_without_
     candidate_encode); measured serve-only cost is 0.26x of the
-    retired build-in-query form at sf0.1
+    build-in-query form at sf0.1
     (bench_history/ivf_pq_serve_split_r12.json). Same oracle as the
-    retired ``ivf_pq_topk`` — the split changed the lifecycle, not
+    build-in-query ``ivf_pq_topk`` — the split changed the lifecycle, not
     the answer (hash parity also pinned by
     test_ivf_pq_prebuilt_oracle_ready)."""
     from ..operators.similarity import (
@@ -485,17 +477,10 @@ def ivf_pq_build_serve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_pq_search(index, probes, cands, k=5)
 
 
-@retired_query("ann_lsh_topk", oracle=_LSH_ORACLE)
+# Not driven: build-in-query form of ann_lsh_build_serve_roundtrip.
+@query("ann_lsh_topk", oracle=_LSH_ORACLE, driver=False)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r13 (verdict item 6):
-    its driver slot now carries ``ann_lsh_build_serve_roundtrip`` —
-    the same bucketing arithmetic under the same oracle, but through
-    the persisted-index build/serve split (row-equality of the two
-    forms is separately pinned by
-    test_prebuilt_serve_paths_match_build_in_query). Stays
-    hash-checked vs DuckDB on every pytest run.
-
-    Multi-probe hyperplane-LSH cosine top-5 at the round-9 swept
+    """Multi-probe hyperplane-LSH cosine top-5 at the round-9 swept
     parameters (6 planes x 8 tables, Hamming-1 multiprobe): measured
     recall@5 = 0.94 at both sf0.01 and sf0.1 vs 0.47 for the previous
     4x4 exact-probe config, for 2.6x the scored pairs and half the
@@ -523,7 +508,7 @@ def ann_lsh_build_serve_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     via ``lsh_search``: only the PROBES are bucketed per query, their
     Hamming-1 neighborhoods equi-join the persisted index, and the
     exact cosine top-5 reranks. Candidate bucketing happens exactly
-    once, at build. Same oracle as the retired build-in-query
+    once, at build. Same oracle as the build-in-query
     ``ann_lsh_topk``; row-equality of the two forms is pinned by
     test_prebuilt_serve_paths_match_build_in_query."""
     from ..operators.similarity import LshIndex, build_lsh_index, lsh_search

@@ -14,7 +14,7 @@ from ..operators.textops import (
     weighted_reservoir_sample,
 )
 from ..sources.parquet import load_table
-from .catalog import CACHES, query, retired_query, track
+from .catalog import CACHES, query, track
 
 _NORM = "regexp_replace(lower(text), '[^a-z0-9]', '', 'g')"
 
@@ -414,15 +414,12 @@ WHERE CAST(concat('0x', substr(md5(text), 1, 2)) AS BIGINT)
 """
 
 
-@retired_query("stratified_sample", oracle=_STRAT_SAMPLE_ORACLE)
+# Not driven: per-group form of deterministic_sample, which is driven.
+@query("stratified_sample", oracle=_STRAT_SAMPLE_ORACLE, driver=False)
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r14 (driver slot
-    displaced by the code-changed r13 greens returning in-window — the
-    rotation rule). Redundant by construction: per-stratum sampling is
-    the same deterministic hash-threshold cut as
-    ``deterministic_sample`` (kept), applied per group via a broadcast
-    rate map; the weighted variant keeps ``weighted_reservoir_sample``.
-    Hash-checked vs DuckDB on every pytest run."""
+    """Per-language deterministic sample: the md5 hash-threshold cut of
+    ``deterministic_sample`` at a per-language rate from a broadcast
+    rate map."""
     docs = load_table(spark, sf_dir, "documents")
     bucket = F.conv(F.substring(F.md5("text"), 1, 2), 16, 10).cast("long")
     cut = F.coalesce(
@@ -1139,11 +1136,8 @@ FROM shard GROUP BY r, b
 """
 
 
-# RETIRED r12 (driver-window capacity, see catalog.py): the shard-merge
-# pattern keeps three registered driver rows (bloom_merge_shards,
-# histogram_merge_shards, hll_merge_shards) and CMS itself keeps
-# cms_heavy_hitters; this merge variant is pytest-hash-checked.
-@retired_query("cms_merge_shards", oracle=_CMS_MERGE_ORACLE)
+# Not driven: shard-merge variant of cms_heavy_hitters, which is driven.
+@query("cms_merge_shards", oracle=_CMS_MERGE_ORACLE, driver=False)
 def cms_merge_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level CMS: per-source 4x1024 counter matrices (map-side
     partials, <=4096 rows per shard through the exchange), merged
@@ -1477,17 +1471,10 @@ FROM shard_bits GROUP BY b
 """
 
 
-@retired_query("bloom_merge_shards", oracle=_BLOOM_MERGE_ORACLE)
+# Not driven: shard-merge variant of bloom_decontaminate, which is driven.
+@query("bloom_merge_shards", oracle=_BLOOM_MERGE_ORACLE, driver=False)
 def bloom_merge_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED to the pytest-only registry in r13: its driver slot was
-    displaced by ``lakehouse_datasource_snapshot`` returning in-window
-    (its code changed this round — the rotation rule). Redundant by
-    construction: the mergeable-sketch shard-merge shape keeps driver
-    rows via ``hll_merge_shards`` and ``histogram_merge_shards``, and
-    the Bloom operator keeps ``bloom_decontaminate``. Hash-checked vs
-    DuckDB on every pytest run.
-
-    Per-source Bloom bit tables (4 salted md5 positions per 3-gram,
+    """Per-source Bloom bit tables (4 salted md5 positions per 3-gram,
     2^16 bits) merged by distinct union. Shard state is <=2^16 rows per
     source through every exchange — the fixed-size property that makes
     the filter shippable at 100 TB."""

@@ -705,8 +705,7 @@ def _write_media_fixture(spark: SparkSession, sf_dir: str, d: str, kinds) -> Non
     id-derived dims and deterministic pixel function) — plus a
     README.txt decoy the scan's glob must prune at listing time.
     Bounded control-plane collect (24 short texts), not a data path;
-    shared by the batch and streaming connector rows, which therefore
-    rotate in-window together whenever this helper changes."""
+    shared by the batch and streaming connector rows."""
     import os
 
     from ..operators.multimodal import (

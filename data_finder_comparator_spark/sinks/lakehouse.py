@@ -1977,7 +1977,7 @@ class TransactionalTable:
                 and all(c in out_fields for c in self.cluster_by)
                 else None
             ),
-            # ghost list of RETIRED PHYSICAL names, riding forever: old
+            # ghost list of retired PHYSICAL names, riding forever: old
             # data files still carry the bytes, so any later field with
             # a colliding name gets a fresh physical via column mapping
             # (see _evolved_schema / rename_column)

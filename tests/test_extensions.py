@@ -18,15 +18,13 @@ def test_lsh_topk_subset_and_recall(spark):
     """LSH-bucketed top-k must (a) only return pairs the brute force
     also scores, with identical cosine values, and (b) keep rank-1
     recall above a floor on this corpus."""
-    from data_finder_comparator_spark.plans.catalog import QUERIES, RETIRED
+    from data_finder_comparator_spark.plans.catalog import QUERIES
 
     brute = {
         (r.probe_id, r.cand_id): r.cos_sim
         for r in QUERIES["ann_cosine_topk"](spark, SF_ORACLE).collect()
     }
-    # ann_lsh_topk retired to the pytest-only registry in r13 (its
-    # driver slot carries the build/serve roundtrip); same arithmetic
-    lsh_rows = RETIRED["ann_lsh_topk"](spark, SF_ORACLE).collect()
+    lsh_rows = QUERIES["ann_lsh_topk"](spark, SF_ORACLE).collect()
     assert lsh_rows, "LSH query returned nothing"
     # cosine values must agree exactly where pairs overlap
     for r in lsh_rows:
@@ -1899,21 +1897,12 @@ def test_sketch_merge_family_registered_with_oracles():
     """Round 7 completes the mergeable-sketch family: HLL (register
     max), CMS (cell sum), Bloom (bit union), histogram (cell sum) all
     exist as registered queries WITH oracles, so the merge algebra of
-    each is driver-hash-checked rather than docstring-asserted. The
+    each is hash-checked against DuckDB rather than docstring-asserted. The
     former inline dress-rehearsal tests folded into these
     registrations (tests share the plans implementation via
-    test_oracle_parity). r12: cms_merge_shards moved to the RETIRED
-    registry (driver-window capacity, catalog.py) — same oracle, same
-    per-run hash check, via test_retired_oracle_parity."""
-    from data_finder_comparator_spark.plans.catalog import (
-        ORACLES,
-        QUERIES,
-        RETIRED,
-        RETIRED_ORACLES,
-    )
+    test_oracle_parity)."""
+    from data_finder_comparator_spark.plans.catalog import ORACLES, QUERIES
 
-    q = {**QUERIES, **RETIRED}
-    o = {**ORACLES, **RETIRED_ORACLES}
     for name in (
         "hll_merge_shards",
         "cms_merge_shards",
@@ -1926,7 +1915,7 @@ def test_sketch_merge_family_registered_with_oracles():
         "cluster_canonical",
         "pcm_resample_layout",
     ):
-        assert name in q and name in o, name
+        assert name in QUERIES and name in ORACLES, name
 
 
 def test_hll_estimate_grows_past_former_saturation(spark):
@@ -2020,7 +2009,7 @@ FROM ranked WHERE rk <= 5
 
 
 def test_token_entropy_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): per-document token-distribution Shannon
+    """Pytest-gated (COVERAGE.md): per-document token-distribution Shannon
     entropy (nats) with decimal-stabilized c*ln(c) sums so the double
     arithmetic restates exactly in SQL."""
     from tests.oracle import compare
@@ -2148,7 +2137,7 @@ FROM flagged GROUP BY 1
 
 
 def test_unigram_logprob_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): per-document mean unigram log-probability
+    """Pytest-gated (COVERAGE.md): per-document mean unigram log-probability
     under the corpus's own unigram model (the cheap LM quality score),
     decimal-stabilized term sums."""
     from tests.oracle import compare
@@ -2180,7 +2169,7 @@ FROM scored GROUP BY doc_id
 
 
 def test_winsorized_event_stats_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): per-event-type winsorized mean — values
+    """Pytest-gated (COVERAGE.md): per-event-type winsorized mean — values
     clamped to histogram-derived [p01, p99] thresholds (identical
     arithmetic to grouped_histogram_quantiles), decimal-stabilized
     sums."""
@@ -2470,7 +2459,7 @@ def test_streaming_checkpoint_restart_no_reprocessing(spark, tmp_path):
 
 
 def test_label_centroid_outliers_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): per-label embedding centroids + each
+    """Pytest-gated (COVERAGE.md): per-label embedding centroids + each
     label's 5 most-outlying vectors by cosine-to-centroid (the
     mislabeled-sample sweep). Decimal dimension sums + the module's
     left-to-right fold make the DuckDB restatement bitwise."""
@@ -2520,7 +2509,7 @@ FROM (
 
 
 def test_zorder_layout_stats_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): z-order (Morton) layout statistics over
+    """Pytest-gated (COVERAGE.md): z-order (Morton) layout statistics over
     events (user_id x value) — per-z-bucket row counts and min/max of
     BOTH grid coordinates, integer-exact vs DuckDB. The locality
     assertion is the point of z-ordering: with 8-bit grids and 6
@@ -2570,7 +2559,7 @@ FROM z GROUP BY bucket
 
 
 def test_streaming_outer_attribution_matches_batch(spark, tmp_path):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): LEFT OUTER stream-stream attribution —
+    """Pytest-gated (COVERAGE.md): LEFT OUTER stream-stream attribution —
     unattributed purchases must surface with null click columns once
     the watermark closes their window, and the attributed subset must
     equal the inner join. Exact stream/batch equivalence via a
@@ -2686,7 +2675,7 @@ def test_hll_sketch_persists_and_merges_across_sessions(spark, tmp_path):
 
 
 def test_user_state_versions_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): SCD2-style temporal versioning of each
+    """Pytest-gated (COVERAGE.md): SCD2-style temporal versioning of each
     user's event stream (gaps-and-islands — consecutive same-state runs
     collapse into versions with validity intervals and a current
     flag). Hash-matched against the DuckDB lag/running-sum
@@ -2728,7 +2717,7 @@ WINDOW wv AS (PARTITION BY user_id ORDER BY ver)
 
 
 def test_source_contamination_matrix_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md): pairwise cross-source 3-gram overlap with
+    """Pytest-gated (COVERAGE.md): pairwise cross-source 3-gram overlap with
     integer containment ppm — the corpus-granularity leakage report.
     Integer-exact vs DuckDB."""
     from tests.oracle import compare
@@ -2774,7 +2763,7 @@ JOIN sizes zb ON zb.source = s.src_b
 
 
 def test_ppm_resize_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md):
+    """Pytest-gated (COVERAGE.md):
     nearest-neighbor P6 image resize — the fixed-resolution
     standardization pass of a vision pipeline. The synthetic pixel
     function and the integer source-index arithmetic restate exactly in
@@ -2864,7 +2853,7 @@ def test_ppm_resize_matches_pure_python_reference(spark):
 
 
 def test_ann_recall_audit_oracle_ready(spark):
-    """Permanently pytest-gated (registry saturated at 99, COVERAGE.md):
+    """Pytest-gated (COVERAGE.md):
     recall@5 of the IVF and hyperplane-LSH ANN paths against the exact
     brute-force top-5 — measured, not assumed, at the registered
     parameters. The oracle embeds the three per-method SQL restatements

@@ -141,6 +141,40 @@ def test_exact_poor_overlap_quirk(spark):
     assert (2, "poor") not in tiers
 
 
+def test_unknown_strategy_raises(spark):
+    """A misspelt strategy must not fall through to a half-broadcast,
+    half-shuffled plan; the config accepts exactly the operator's set."""
+    from data_finder_comparator_spark.config import EngineConfig
+
+    probe = spark.createDataFrame(PROBES, "probe_id long, probe string")
+    cand = spark.createDataFrame(CANDS, "cand_id long, cand string")
+    with pytest.raises(ValueError, match="unknown strategy"):
+        tiered_fuzzy_join(probe, cand, threshold=3, strategy="qgrm")
+    from data_finder_comparator_spark.operators.fuzzy_join import STRATEGIES
+
+    for strategy in STRATEGIES:
+        assert EngineConfig(strategy=strategy).strategy == strategy
+
+
+@pytest.mark.parametrize("prepared", [False, True])
+def test_negative_threshold_raises(spark, prepared):
+    """threshold < 0 keeps no phase-1 pair, so the banded path would tag
+    a dist-0 match 'poor' only while the dense path tags it 'exact'
+    too; both paths refuse it instead."""
+    from data_finder_comparator_spark.operators.fuzzy_join import prepare_candidates
+
+    probe = spark.createDataFrame([(1, "abc-123")], "probe_id long, probe string")
+    cand = spark.createDataFrame([(10, "ABC123")], "cand_id long, cand string")
+    reg: list = []
+    prep = prepare_candidates(cand, cache_registry=reg) if prepared else None
+    try:
+        with pytest.raises(ValueError, match="threshold"):
+            tiered_fuzzy_join(probe, cand, threshold=-1, prepared=prep)
+    finally:
+        for df in reg:
+            df.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # topk_fuzzy_join (O2 escalating-band top-k)
 # ---------------------------------------------------------------------------
@@ -195,6 +229,16 @@ def test_topk_matches_brute_force(spark):
         ).collect()
     }
     assert got == _brute_topk(probes, cands, 3)
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_topk_k_below_one_raises(spark, k):
+    from data_finder_comparator_spark.operators.fuzzy_join import topk_fuzzy_join
+
+    probe = spark.createDataFrame(PROBES, "probe_id long, probe string")
+    cand = spark.createDataFrame(CANDS, "cand_id long, cand string")
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        topk_fuzzy_join(probe, cand, k=k)
 
 
 def test_topk_fewer_candidates_than_k(spark):

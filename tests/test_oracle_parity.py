@@ -1,18 +1,16 @@
-"""Oracle-differential tests: every registered query with an oracle must
-hash-match DuckDB at sf0.01 — the same gate the driver applies.
+"""Oracle-differential tests: every registered query with an oracle,
+driven or not, must hash-match DuckDB at sf0.01 — the same gate the
+driver applies.
 
-r19 (verdict item 1 — the driver's verify outran its budget at ~94%):
-the ~118 oracle comparisons and the 97-query smoke counts used to run
-SERIALLY, one Spark action at a time, leaving the session idle between
-job tails. They are independent queries, so a session-scoped fixture
-now precomputes them once through a small thread pool (guide §2.6 —
-overlap independent jobs; Spark's scheduler runs concurrent jobs in one
-application). Every test still executes and asserts its own query's
-result — only the wall-clock overlaps. Each worker thread runs its
-query on ``spark.newSession()`` so per-session conf (the streaming
-wrappers' scoped shuffle-partition/timezone swaps, the parquet loader's
-nanosAsLong pin) stays thread-isolated; the shared lakehouse build memo
-takes a lock (queries_lakehouse._MERGE_TABLES_LOCK)."""
+The oracle comparisons are independent queries, so a session-scoped
+fixture precomputes them once through a small thread pool (Spark's
+scheduler runs concurrent jobs in one application). Every test still
+asserts its own query's result — only the wall-clock overlaps. Each
+worker thread runs its query on ``spark.newSession()`` so per-session
+conf (the streaming wrappers' scoped shuffle-partition/timezone swaps,
+the parquet loader's nanosAsLong pin) stays thread-isolated; the shared
+lakehouse build memo takes a lock
+(queries_lakehouse._MERGE_TABLES_LOCK)."""
 
 from __future__ import annotations
 
@@ -45,34 +43,19 @@ def _retry_worker_spawn(name, compute):
             return False, f"raised {e!r}"
 
 
-def _cases():
-    from data_finder_comparator_spark.plans.catalog import ORACLES, QUERIES
+def _oracle_names():
+    from data_finder_comparator_spark.plans.catalog import ORACLES
 
-    return [(name, QUERIES[name], ORACLES[name]) for name in sorted(ORACLES)]
-
-
-def _retired_cases():
-    from data_finder_comparator_spark.plans.catalog import RETIRED_ORACLES
-
-    return sorted(RETIRED_ORACLES)
+    return sorted(ORACLES)
 
 
 @pytest.fixture(scope="session")
 def parity_results(spark):
-    """name -> (ok, msg) for every registered AND retired oracle,
-    computed concurrently. Retired names are prefixed 'retired:'."""
-    from data_finder_comparator_spark.plans.catalog import (
-        ORACLES,
-        QUERIES,
-        RETIRED,
-        RETIRED_ORACLES,
-    )
+    """name -> (ok, msg) for every registered oracle, driver or not,
+    computed concurrently."""
+    from data_finder_comparator_spark.plans.catalog import ORACLES, QUERIES
 
-    jobs = [(n, QUERIES[n], ORACLES[n]) for n in sorted(ORACLES)]
-    jobs += [
-        ("retired:" + n, RETIRED[n], RETIRED_ORACLES[n])
-        for n in sorted(RETIRED_ORACLES)
-    ]
+    jobs = [(n, QUERIES[n], ORACLES[n]) for n in _oracle_names()]
 
     def one(item):
         name, fn, sql = item
@@ -84,33 +67,28 @@ def parity_results(spark):
         return dict(pool.map(one, jobs))
 
 
-@pytest.mark.parametrize("name", [c[0] for c in _cases()])
+@pytest.mark.parametrize("name", _oracle_names())
 def test_oracle_parity(parity_results, name):
     ok, msg = parity_results[name]
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", _retired_cases())
-def test_retired_oracle_parity(parity_results, name):
-    """Queries retired from the driver registry (r12: the registry's
-    sustainable capacity is 99 — see catalog.py) keep the exact same
-    hash-vs-DuckDB gate here, every pytest run."""
-    ok, msg = parity_results["retired:" + name]
-    assert ok, f"{name}: {msg}"
-
-
-def test_retired_names_absent_from_driver_registry():
-    """Retirement is a MOVE, not a duplicate registration: a name in
-    RETIRED must not also occupy a driver slot, and retirement must
-    never orphan an oracle."""
+def test_registry_consistency():
+    """One registry: no oracle without its query, 118 queries of which
+    97 are driven, and the driver contract exposes exactly the driven
+    names (with oracles only for those)."""
+    import __spark_entry__ as e
     from data_finder_comparator_spark.plans.catalog import (
+        ORACLES,
         QUERIES,
-        RETIRED,
-        RETIRED_ORACLES,
+        driver_names,
     )
 
-    assert not set(RETIRED) & set(QUERIES)
-    assert set(RETIRED_ORACLES) <= set(RETIRED)
+    assert set(ORACLES) <= set(QUERIES)
+    assert len(QUERIES) == 118
+    assert len(driver_names()) == 97
+    assert list(e.queries()) == driver_names()
+    assert set(e.oracle_sql()) <= set(driver_names())
 
 
 def test_parity_retries_worker_spawn_failure_once():
@@ -148,15 +126,14 @@ def test_parity_does_not_retry_other_errors():
 
 
 def test_all_queries_return_rows(spark):
-    from data_finder_comparator_spark.plans.catalog import QUERIES
+    """Smoke-run the queries without an oracle; ``test_oracle_parity``
+    already runs every oracled one on the same data."""
+    from data_finder_comparator_spark.plans.catalog import ORACLES, QUERIES
 
-    def count_one(item):
-        name, fn = item
-        return name, fn(spark.newSession(), SF_ORACLE).count()
-
-    with ThreadPoolExecutor(max_workers=_POOL_THREADS) as pool:
-        for name, n in pool.map(count_one, list(QUERIES.items())):
-            assert n >= 0, name
+    unoracled = [n for n in QUERIES if n not in ORACLES]
+    assert unoracled
+    for name in unoracled:
+        assert QUERIES[name](spark, SF_ORACLE).count() >= 0, name
 
 
 def test_entry_smoke(spark):
@@ -173,21 +150,18 @@ def test_golden_literal_oracles_stay_exceptional_and_pinned():
     independent correctness — DuckDB is restating literals, not
     recomputing. That is acceptable ONLY for measurements SQL cannot
     express (the ann_audit_lifecycle recall audit), so (a) at most TWO
-    registered/retired oracles may be golden literals, and (b) every
+    registered oracles may be golden literals, and (b) every
     golden oracle must carry a convention-named semantic pytest pin
     (``test_<name>_driver_row``) that re-derives its constants from
     the operators — so the literal can never be the cheap path to a
     green driver row."""
     import glob
 
-    from data_finder_comparator_spark.plans.catalog import (
-        ORACLES,
-        RETIRED_ORACLES,
-    )
+    from data_finder_comparator_spark.plans.catalog import ORACLES
 
     golden = sorted(
         name
-        for name, sql in {**RETIRED_ORACLES, **ORACLES}.items()
+        for name, sql in ORACLES.items()
         if sql.lstrip().upper().startswith("SELECT * FROM (VALUES")
     )
     assert len(golden) <= 2, (
@@ -203,51 +177,3 @@ def test_golden_literal_oracles_stay_exceptional_and_pinned():
     assert not unpinned, (
         f"golden oracles without a test_<name>_driver_row semantic pin: {unpinned}"
     )
-
-
-def test_rotation_invariant_parked_queries_have_driver_rows():
-    """Every parked query must have at least one green driver
-    CORRECTNESS row from a previous round (parking is only for
-    already-driver-verified queries), and the registry must leave
-    exactly 50 queries inside the driver's verified window."""
-    import glob
-    import json
-
-    from data_finder_comparator_spark.plans.catalog import (
-        _PARKED_MULTI_GREEN,
-        QUERIES,
-    )
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(
-        glob.glob(os.path.join(root, "CORRECTNESS_r*.json")),
-        key=lambda f: int("".join(ch for ch in os.path.basename(f) if ch.isdigit())),
-    )
-    if not files:
-        return  # fresh clone without driver artifacts
-    # The invariant is two-round freshness: a parked query must have a
-    # driver-green row within the LAST TWO correctness files. Checking
-    # only the newest file would fail by construction the moment the
-    # current round's own artifact lands (parked queries are exactly
-    # the ones outside that round's 50-query driver window — advisor
-    # finding, round 7), so the check matches the documented invariant:
-    # green in round N-1 or N, i.e. never more than one round old.
-    recent_green: set[str] = set()
-    for f in files[-2:]:
-        recent_green |= {
-            name
-            for name, row in json.load(open(f)).items()
-            if row.get("hash_match")
-        }
-    stale = [n for n in _PARKED_MULTI_GREEN if n not in recent_green]
-    assert not stale, f"parked without a driver-green row in the last two rounds: {stale}"
-    # A parked query that DID run in the newest round must not have
-    # regressed there — an older green row never excuses a fresh red.
-    latest = json.load(open(files[-1]))
-    regressed = [
-        n
-        for n in _PARKED_MULTI_GREEN
-        if n in latest and not latest[n].get("hash_match")
-    ]
-    assert not regressed, f"parked but red in the newest driver round: {regressed}"
-    assert len(QUERIES) - len(_PARKED_MULTI_GREEN) == 50

@@ -7,13 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_finder_comparator_spark.plans.catalog import QUERIES as _Q
-from data_finder_comparator_spark.plans.catalog import RETIRED as _R
-
-# plan pins outlive driver-registry retirement: a retired query's
-# physical plan is still the one its operator ships, so resolve
-# names from either registry
-QUERIES = {**_R, **_Q}
+from data_finder_comparator_spark.plans.catalog import QUERIES
 
 SF = "/root/testdata/sf0.001"
 

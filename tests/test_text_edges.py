@@ -176,22 +176,18 @@ def test_round7_doc_queries_edge_corpus_parity(spark, edge_dir):
     from data_finder_comparator_spark.plans.catalog import (
         ORACLES,
         QUERIES,
-        RETIRED,
-        RETIRED_ORACLES,
         release_caches,
     )
 
-    q = {**QUERIES, **RETIRED}
-    o = {**ORACLES, **RETIRED_ORACLES}
     for name in (
         "scrub_hot_spans",
         "inverted_index",
-        "bloom_merge_shards",  # retired r13: still edge-checked here
+        "bloom_merge_shards",
         "grouped_hll_by_lang",
         "pcm_resample_layout",
     ):
         try:
-            ok, msg = compare(q[name](spark, edge_dir), o[name], edge_dir)
+            ok, msg = compare(QUERIES[name](spark, edge_dir), ORACLES[name], edge_dir)
         finally:
             release_caches()
         assert ok, f"{name}: {msg}"
