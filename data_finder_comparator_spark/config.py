@@ -36,7 +36,7 @@ class EngineConfig:
     data_key_col: str = "sku"      # candidate key column (reference: column_index2)
     threshold: int = 3             # edit-distance threshold (config.ini:13)
     strategy: str = "broadcast"    # broadcast | band | qgram
-    streaming: bool = False        # micro-batch pipeline (reference: multithreading)
+    streaming: bool = False        # file stream, whole files per micro-batch (reference: multithreading)
     output_distances: bool = False  # include dist column in sink (config.ini:6-8)
     spark_conf: dict[str, str] = field(default_factory=dict)
 

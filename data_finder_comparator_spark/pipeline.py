@@ -15,6 +15,9 @@ when probes arrive as a live feed).
 
 from __future__ import annotations
 
+import tempfile
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,13 +66,16 @@ def _curate(
     """One find/compare/curate pass of a search table against the
     candidate table (``_prep_cands`` output). Streaming mode passes
     ``prepared`` (``prepare_candidates`` run once before the stream
-    starts) while its probe files are small (see ``_drain_stream``):
-    each epoch then skips the candidate normalization and stats job,
-    and takes the dense one-pass tier path while ``prepared.n_cand`` is
+    starts) while its epochs are small (see ``_drain_stream``): each
+    epoch then skips the candidate normalization and stats job, and
+    takes the dense one-pass tier path while ``prepared.n_cand`` is
     within ``SPARK_GRAFT_DENSE_CANDS`` (strategy "broadcast" only);
     above it the banded plan runs. Without ``prepared`` (batch mode,
     and streams of large files) the banded plan runs, since the dense
-    path loses once the probe count is large."""
+    path loses once the probe count is large. Row ids only join each
+    probe's decision back to its row and are dropped before the
+    return, so curating several files together writes the rows that
+    curating each file alone writes."""
     # deterministic row identity for the probe side (P4 — Spark has no
     # positional rows; impose a total order on (key, payload order))
     search_ids = with_row_ids(search, [cfg.search_key_col, *search.columns])
@@ -99,14 +105,15 @@ def _curate(
     return curated.drop("row_id")
 
 
-# A streamed epoch reuses the prepared catalog only while the largest
-# probe file times the catalog size stays within this many pairs. The
+# Pair budget of one streamed epoch: the prepared catalog is reused
+# only while the largest probe file times the catalog size stays within
+# it, and then each epoch packs as many whole files as fit in it. The
 # dense one-pass path (what a prepared catalog within
 # SPARK_GRAFT_DENSE_CANDS takes) scores and windows the full
-# |file| x n_cand product, while the banded plan costs mostly a fixed
-# set of jobs, so the dense path only wins on small files. Measured on
+# |epoch| x n_cand product, while the banded plan costs mostly a fixed
+# set of jobs, so the dense path only wins on small epochs. Measured on
 # a 4-core host, 2 files against 2000 SKU-like keys, dense vs batch-mode
-# epochs: 0.53x at 64k pairs per file, 0.75x at 256k, 0.97x at 512k,
+# epochs: 0.53x at 64k pairs per epoch, 0.75x at 256k, 0.97x at 512k,
 # 1.20x at 1M, 1.93x at 2M. The cap sits below that crossover; longer
 # keys (the DP is quadratic in key length) move it lower.
 _DENSE_EPOCH_PAIRS = 1 << 18
@@ -132,22 +139,27 @@ def _parquet_rows(spark: SparkSession, paths: list[str]) -> list[int]:
 
 
 def _drain_stream(spark: SparkSession, cfg: EngineConfig, prepared: PreparedCandidates) -> None:
-    """Curate each probe file under ``cfg.search_path`` as one
-    micro-batch against the prepared catalog and append it to the sink;
-    returns when every file available at start has been processed.
+    """Curate the probe files under ``cfg.search_path`` in micro-batches
+    against the prepared catalog and append each to the sink; returns
+    when every file available at start has been processed.
 
-    The epoch plan is chosen once, from the footer row counts of the
-    files present at start: when the largest file times ``n_cand`` is
-    within ``_DENSE_EPOCH_PAIRS`` every epoch passes ``prepared`` to
-    the tier join; otherwise every epoch runs the batch-mode plan over
-    the prepared (persisted) catalog frame. A file that lands after
-    this listing is not counted."""
+    The epoch plan and size are chosen once, from the footer row counts
+    of the files present at start. When the largest file times
+    ``n_cand`` is within ``_DENSE_EPOCH_PAIRS``, every epoch passes
+    ``prepared`` to the tier join and packs as many whole files as
+    that budget holds at the largest file's size; otherwise each epoch
+    is one file and runs the batch-mode plan over the prepared
+    (persisted) catalog frame. A file that lands after this listing is
+    not counted. The query checkpoints to a temporary directory that is
+    deleted when the drain ends, so a session-wide
+    ``spark.sql.streaming.checkpointLocation`` collects nothing."""
     search = spark.read.parquet(cfg.search_path)
     largest = max(_parquet_rows(spark, search.inputFiles()), default=0)
-    epoch_prepared = prepared if largest * prepared.n_cand <= _DENSE_EPOCH_PAIRS else None
+    files_per_epoch = _DENSE_EPOCH_PAIRS // max(1, largest * prepared.n_cand)  # 0 above the gate
+    epoch_prepared = prepared if files_per_epoch else None
     stream = (
         spark.readStream.schema(search.schema)
-        .option("maxFilesPerTrigger", 1)  # Queue(3)-style bounded in-flight
+        .option("maxFilesPerTrigger", max(1, files_per_epoch))
         .parquet(cfg.search_path)
     )
 
@@ -164,11 +176,17 @@ def _drain_stream(spark: SparkSession, cfg: EngineConfig, prepared: PreparedCand
             for cached in reg:
                 cached.unpersist()
 
-    q = stream.writeStream.foreachBatch(run_batch).trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    with tempfile.TemporaryDirectory(prefix="find-compare-stream-") as ckpt:
+        q = (
+            stream.writeStream.foreachBatch(run_batch)
+            .option("checkpointLocation", Path(ckpt).as_uri())
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
 
 
 def run_find_compare(
@@ -180,20 +198,25 @@ def run_find_compare(
     updates rows in place); otherwise rows append.
 
     ``cfg.streaming=True`` (the reference's multithreading pipeline,
-    T1) processes the search path as a file stream instead, one probe
-    file per micro-batch, appended to the sink; requires
-    ``cfg.output_path``. The static catalog is prepared ONCE before the
-    stream starts (``prepare_candidates``: normalized, persisted, and
-    its count / max-length stats taken). When the largest probe file
-    present at start times ``n_cand`` is within ``_DENSE_EPOCH_PAIRS``,
-    every epoch reuses those stats: with ``n_cand`` within
-    ``SPARK_GRAFT_DENSE_CANDS`` (4096) and the broadcast strategy an
-    epoch is one broadcast nested-loop pass plus one window, otherwise
-    the banded plan without the candidate stats job. Larger files run
-    the batch-mode plan per epoch. The prepared frames are released
-    when the call returns or raises. Row identity is per-file in this
-    mode. ``cfg.spark_conf`` entries are applied as runtime session
-    confs for the duration of the run and restored afterwards."""
+    T1) processes the search path as a file stream instead, whole probe
+    files per micro-batch, appended to the sink; requires
+    ``cfg.output_path``, checked before any Spark job. The static
+    catalog is prepared ONCE before the stream starts
+    (``prepare_candidates``: normalized, persisted, and its count /
+    max-length stats taken). When the largest probe file present at
+    start times ``n_cand`` is within ``_DENSE_EPOCH_PAIRS``, every
+    epoch reuses those stats and packs as many files as fit in that
+    pair budget: with ``n_cand`` within ``SPARK_GRAFT_DENSE_CANDS``
+    (4096) and the broadcast strategy an epoch is one broadcast
+    nested-loop pass plus one window, otherwise the banded plan without
+    the candidate stats job. Larger files run the batch-mode plan, one
+    file per epoch. The prepared frames are released when the call
+    returns or raises. The sink holds the rows that batch runs of each
+    file would write. ``cfg.spark_conf`` entries are applied as runtime
+    session confs for the duration of the run and restored
+    afterwards."""
+    if cfg.streaming and not cfg.output_path:
+        raise ValueError("streaming mode requires output_path (sink)")
     prior_conf = {k: spark.conf.get(k, None) for k in cfg.spark_conf}
     for k, v in cfg.spark_conf.items():
         spark.conf.set(k, v)
@@ -202,8 +225,6 @@ def run_find_compare(
         cands = _prep_cands(data, cfg)
 
         if cfg.streaming:
-            if not cfg.output_path:
-                raise ValueError("streaming mode requires output_path (sink)")
             static: list = []
             try:
                 # static side: normalized, persisted and measured once

@@ -95,7 +95,7 @@ def test_streaming_mode_and_distances(spark, tmp_path):
 
 def _write_stream_fixtures(tmp_path, n_files: int = 2):
     """A two-file catalog with drifting schemas and ``n_files`` probe
-    files in one folder (the stream drains one file per micro-batch).
+    files in one folder (the stream drains whole files per micro-batch).
     Each file holds an exact, a unique-best, a tied-best and a
     poor-only probe; ``src`` names the file, so the sink can be split
     back into files."""
@@ -231,6 +231,108 @@ def test_streaming_releases_prepared_catalog(spark, tmp_path):
     assert _cache_entries(spark) == before
 
 
+def test_streaming_config_error_launches_no_job(spark, tmp_path):
+    """A streamed run without a sink is refused before any Spark job."""
+    search_path, folder = _write_stream_fixtures(tmp_path)
+
+    def call():
+        with pytest.raises(ValueError, match="requires output_path"):
+            run_find_compare(
+                spark,
+                EngineConfig(search_path=search_path, data_folder=folder, streaming=True),
+            )
+
+    assert _jobs_launched(spark, call) == 0
+
+
+def test_streaming_leaves_no_checkpoint(spark, tmp_path):
+    """With a session-wide checkpoint location set, a streamed run
+    leaves nothing under it: the drain checkpoints to its own temporary
+    directory and deletes it."""
+    search_path, folder = _write_stream_fixtures(tmp_path)
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    for i in range(2):
+        run_find_compare(
+            spark,
+            EngineConfig(
+                search_path=search_path,
+                data_folder=folder,
+                output_path=str(tmp_path / f"stream_out{i}"),
+                streaming=True,
+                spark_conf={"spark.sql.streaming.checkpointLocation": str(ckpt)},
+            ),
+        )
+    assert list(ckpt.iterdir()) == []
+
+
+def test_streaming_packs_files_by_pair_budget(spark, tmp_path, monkeypatch):
+    """Each streamed epoch packs as many whole files as the pair budget
+    holds (4 probes x 7 catalog keys per file here): a budget of two
+    files drains 5 files in 3 dense epochs, and the sink still equals a
+    batch run of each file. A budget below one file takes the
+    batch-mode plan, one epoch per file."""
+    from data_finder_comparator_spark import pipeline
+    from data_finder_comparator_spark.operators import fuzzy_join
+
+    dense_calls = []
+    real_dense = fuzzy_join._dense_tiers
+    monkeypatch.setattr(
+        fuzzy_join,
+        "_dense_tiers",
+        lambda *a: dense_calls.append(1) or real_dense(*a),
+    )
+    # one entry per epoch: did it get the prepared catalog?
+    epochs = []
+    real_curate = pipeline._curate
+    monkeypatch.setattr(
+        pipeline,
+        "_curate",
+        lambda *a, **kw: epochs.append(kw.get("prepared") is not None) or real_curate(*a, **kw),
+    )
+    search_path, folder = _write_stream_fixtures(tmp_path, n_files=5)
+
+    def streamed(name):
+        return run_find_compare(
+            spark,
+            EngineConfig(
+                search_path=search_path,
+                data_folder=folder,
+                output_path=str(tmp_path / name),
+                threshold=3,
+                streaming=True,
+                output_distances=True,
+            ),
+        )
+
+    def rows(df):
+        return sorted(map(repr, df.select(sorted(df.columns)).collect()))
+
+    monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 2 * 4 * 7)
+    sink = streamed("packed")
+    assert len(dense_calls) == 3
+    assert epochs == [True] * 3
+    for i in range(5):
+        batch = run_find_compare(
+            spark,
+            EngineConfig(
+                search_path=f"{search_path}/probes-{i:03d}.parquet",
+                data_folder=folder,
+                threshold=3,
+                output_distances=True,
+            ),
+        )
+        assert rows(sink.filter(F.col("src") == f"f{i}")) == rows(batch)
+
+    monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7 - 1)
+    dense_calls.clear()
+    epochs.clear()
+    one_per_file = streamed("one_per_file")
+    assert dense_calls == []
+    assert epochs == [False] * 5
+    assert rows(one_per_file) == rows(sink)
+
+
 # Job-count floor of a streamed run_find_compare against a small catalog,
 # by job-id range: per micro-batch 4 (the dense tier pass with its
 # curation, and the sink write), per call 8 more (catalog and probe
@@ -239,20 +341,29 @@ _STREAM_JOBS_PER_BATCH = 4
 _STREAM_JOBS_FIXED = 8
 
 
-def test_streaming_job_count(spark, tmp_path):
-    """The prepared catalog keeps each micro-batch at its job floor:
-    the jobs of a 1-file and a 2-file streamed run differ by one
-    batch's jobs."""
-    counts = []
-    for n_files in (1, 2):
-        search_path, folder = _write_stream_fixtures(tmp_path / f"n{n_files}", n_files)
-        cfg = EngineConfig(
-            search_path=search_path,
-            data_folder=folder,
-            output_path=str(tmp_path / f"out{n_files}"),
-            streaming=True,
-        )
-        counts.append(_jobs_launched(spark, lambda: run_find_compare(spark, cfg)))
+def _stream_jobs(spark, tmp_path, n_files: int) -> int:
+    search_path, folder = _write_stream_fixtures(tmp_path / f"n{n_files}", n_files)
+    cfg = EngineConfig(
+        search_path=search_path,
+        data_folder=folder,
+        output_path=str(tmp_path / f"out{n_files}"),
+        streaming=True,
+    )
+    return _jobs_launched(spark, lambda: run_find_compare(spark, cfg))
+
+
+def test_streaming_job_count(spark, tmp_path, monkeypatch):
+    """At the default pair budget a 1-file and a 2-file streamed run
+    share one epoch and launch the same jobs. With the budget forced
+    to one file's pairs, the prepared catalog keeps each micro-batch at
+    its job floor: the two runs differ by one batch's jobs."""
+    from data_finder_comparator_spark import pipeline
+
+    packed = [_stream_jobs(spark, tmp_path / "packed", n) for n in (1, 2)]
+    assert packed[0] == packed[1], packed
+
+    monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7)
+    counts = [_stream_jobs(spark, tmp_path / "per_file", n) for n in (1, 2)]
     per_batch = counts[1] - counts[0]
     assert per_batch <= _STREAM_JOBS_PER_BATCH, counts
     assert counts[0] - per_batch <= _STREAM_JOBS_FIXED, counts
