@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.union import ParquetFooters
+
 
 def curation_decisions(tiers: DataFrame) -> DataFrame:
     """Collapse a tiered fuzzy-join result (OUT_COLS of
@@ -59,7 +61,7 @@ def apply_curation(probe_df: DataFrame, decisions: DataFrame, id_col: str, key_c
     # reserved names for the decision columns: a probe table may
     # legitimately carry its own 'action'/'final_key' (audit data) —
     # joining them verbatim made the reference ambiguous and the final
-    # drop would delete the user's column (r13 review finding)
+    # drop would delete the user's column
     d = F.broadcast(
         decisions.select(
             F.col("probe_id").alias(id_col),
@@ -149,7 +151,7 @@ def upsert_sink(df: DataFrame, path: str, key_col: str) -> None:
     if not has_data:
         df.write.mode("overwrite").parquet(path)
         return
-    existing = spark.read.parquet(path)
+    existing = ParquetFooters(spark).frame(path)
     kept = existing.join(df.select(key_col).distinct(), key_col, "left_anti")
     kept.unionByName(df).write.mode("overwrite").parquet(str(staging))
     if not fs.rename(jpath, old):

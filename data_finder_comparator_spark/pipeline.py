@@ -34,7 +34,7 @@ from .operators.fuzzy_join import (
     prepare_candidates,
     tiered_fuzzy_join,
 )
-from .sources.union import hadoop_ls, union_by_name
+from .sources.union import ParquetFooters, hadoop_ls, union_by_name
 
 
 def read_folder(spark: SparkSession, folder: str) -> DataFrame:
@@ -42,11 +42,15 @@ def read_folder(spark: SparkSession, folder: str) -> DataFrame:
     name, null-filling columns missing from any file — the pandas
     concat semantics of /root/reference/main.py:690-696 without the
     driver-side loop. Listing via the shared Hadoop-FS helper
-    (``sources.union.hadoop_ls``) — one listing path for the engine."""
+    (``sources.union.hadoop_ls``) — one listing path for the engine.
+    Each table's schema comes from its footers on the driver
+    (``sources.union.ParquetFooters``), so the read launches no Spark
+    job."""
     paths = hadoop_ls(spark, folder)
     if not paths:
         raise ValueError(f"no tables under {folder}")
-    return union_by_name([spark.read.parquet(p) for p in paths])
+    footers = ParquetFooters(spark)
+    return union_by_name([footers.frame(p) for p in paths])
 
 
 def _prep_cands(data: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -119,33 +123,17 @@ def _curate(
 _DENSE_EPOCH_PAIRS = 1 << 18
 
 
-def _parquet_rows(spark: SparkSession, paths: list[str]) -> list[int]:
-    """Row count of each parquet file, read from its footer on the
-    driver through the Hadoop FileSystem API (no Spark job)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    rows = []
-    for path in paths:
-        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                jvm.org.apache.hadoop.fs.Path(path), conf
-            )
-        )
-        try:
-            rows.append(reader.getRecordCount())
-        finally:
-            reader.close()
-    return rows
-
-
 def _drain_stream(spark: SparkSession, cfg: EngineConfig, prepared: PreparedCandidates) -> None:
     """Curate the probe files under ``cfg.search_path`` in micro-batches
     against the prepared catalog and append each to the sink; returns
     when every file available at start has been processed.
 
-    The epoch plan and size are chosen once, from the footer row counts
-    of the files present at start. When the largest file times
-    ``n_cand`` is within ``_DENSE_EPOCH_PAIRS``, every epoch passes
+    One pass over the footers of the probe files present at start, on
+    the driver and without a Spark job, gives the stream's schema (the
+    first file's, or all merged under ``spark.sql.parquet.mergeSchema``,
+    as inference gives it) and each file's row count. The epoch plan
+    and size are chosen once, from those counts. When the largest file
+    times ``n_cand`` is within ``_DENSE_EPOCH_PAIRS``, every epoch passes
     ``prepared`` to the tier join and packs as many whole files as
     that budget holds at the largest file's size; otherwise each epoch
     is one file and runs the batch-mode plan over the prepared
@@ -153,12 +141,19 @@ def _drain_stream(spark: SparkSession, cfg: EngineConfig, prepared: PreparedCand
     not counted. The query checkpoints to a temporary directory that is
     deleted when the drain ends, so a session-wide
     ``spark.sql.streaming.checkpointLocation`` collects nothing."""
-    search = spark.read.parquet(cfg.search_path)
-    largest = max(_parquet_rows(spark, search.inputFiles()), default=0)
+    footers = ParquetFooters(spark)
+    files = footers.files(cfg.search_path)
+    if files:
+        probe_footers = footers.read(files)
+        schema = footers.schema(probe_footers)
+    else:  # partitioned or empty: Spark's inference (and its error)
+        search = spark.read.parquet(cfg.search_path)
+        schema, probe_footers = search.schema, footers.read(search.inputFiles())
+    largest = max((rows for _, rows in probe_footers), default=0)
     files_per_epoch = _DENSE_EPOCH_PAIRS // max(1, largest * prepared.n_cand)  # 0 above the gate
     epoch_prepared = prepared if files_per_epoch else None
     stream = (
-        spark.readStream.schema(search.schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max(1, files_per_epoch))
         .parquet(cfg.search_path)
     )
@@ -212,7 +207,11 @@ def run_find_compare(
     the candidate stats job. Larger files run the batch-mode plan, one
     file per epoch. The prepared frames are released when the call
     returns or raises. The sink holds the rows that batch runs of each
-    file would write. ``cfg.spark_conf`` entries are applied as runtime
+    file would write. Every parquet read on the way (catalog folder,
+    search path, returned sink) takes its schema from footers on the
+    driver, not from an inference job, so a streamed call over a small
+    catalog launches the catalog preparation's jobs plus 4 per epoch.
+    ``cfg.spark_conf`` entries are applied as runtime
     session confs for the duration of the run and restored
     afterwards."""
     if cfg.streaming and not cfg.output_path:
@@ -233,9 +232,9 @@ def run_find_compare(
             finally:
                 for cached in static:
                     cached.unpersist()
-            return spark.read.parquet(cfg.output_path)
+            return ParquetFooters(spark).frame(cfg.output_path)
 
-        search = spark.read.parquet(cfg.search_path)
+        search = ParquetFooters(spark).frame(cfg.search_path)
         curated = _curate(spark, search, cands, cfg)
         if cfg.output_path:
             if cfg.output_path.endswith(".xlsx"):

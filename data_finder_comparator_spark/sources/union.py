@@ -6,7 +6,8 @@ missing columns (pandas ``concat`` — /root/reference/main.py:690-696,
 operator S2/U1 in SURVEY.md §2). The Spark-native equivalents:
 
 * homogeneous schemas → a single multi-file ``spark.read.parquet(dir)``
-  scan (one job, partition-parallel, no union nodes in the plan);
+  scan (partition-parallel, no union nodes in the plan; its schema
+  comes from the footers on the driver, so building it runs no job);
 * heterogeneous schemas → ``unionByName(allowMissingColumns=True)``
   which is exactly pandas-concat-by-name: permissive UNION ALL,
   null-filling columns a file lacks, duplicate rows preserved.
@@ -17,9 +18,12 @@ is one distributed scan, not 100k driver-side reads.
 
 from __future__ import annotations
 
+import json
 from functools import reduce
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def union_by_name(dfs: list[DataFrame]) -> DataFrame:
@@ -57,6 +61,116 @@ def hadoop_ls(spark: SparkSession, folder: str, suffix: str | None = None) -> li
     )
 
 
+class ParquetFooters:
+    """Parquet schemas and row counts read from file footers on the
+    driver through the Hadoop FileSystem API, so no Spark job runs.
+    A plain ``spark.read.parquet(path)`` runs one schema-inference job
+    per call, and at the reference's size (a search sheet against a
+    catalog folder) those jobs are most of the time.
+
+    A footer maps to the schema inference would give: Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` reads it, taking Spark's
+    row metadata when a Spark writer left it, else converting the
+    parquet types with the session's ``binaryAsString``,
+    ``int96AsTimestamp``, ``nanosAsLong`` and NTZ-inference settings.
+    The JVM handles are resolved once per instance, and the converter
+    takes the session confs current at construction, so make one per
+    call."""
+
+    def __init__(self, spark: SparkSession):
+        gateway = spark.sparkContext._gateway._gateway_client
+
+        # a JavaClass by name costs no py4j round trip; the attribute
+        # walk (spark._jvm.org.apache...) costs one per package segment
+        def cls(name: str) -> JavaClass:
+            return JavaClass(name, gateway)
+
+        parquet = "org.apache.spark.sql.execution.datasources.parquet."
+        sqlconf = spark._jsparkSession.sessionState().conf()
+        self.spark = spark
+        self.merging = sqlconf.isParquetSchemaMergingEnabled()
+        self._case_sensitive = sqlconf.caseSensitiveAnalysis()
+        self._conf = spark._jsc.hadoopConfiguration()
+        # read options built once: ParquetFileReader.open(file) without
+        # them rebuilds them from the Hadoop conf, ~10 ms per footer
+        self._options = cls("org.apache.parquet.HadoopReadOptions").builder(self._conf).build()
+        self._path = cls("org.apache.hadoop.fs.Path")
+        self._input_file = cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath
+        self._open = cls("org.apache.parquet.hadoop.ParquetFileReader").open
+        self._footer = cls("org.apache.parquet.hadoop.Footer")
+        self._to_schema = cls(parquet + "ParquetFileFormat").readSchemaFromFooter
+        self._converter = cls(parquet + "ParquetToSparkSchemaConverter")(sqlconf)
+        self._from_json = cls("org.apache.spark.sql.types.DataType").fromJson
+
+    def files(self, path: str) -> list[str] | None:
+        """The data files a parquet read of ``path`` scans, sorted by
+        path as Spark's inference sorts them: ``path`` itself when it
+        is a file, else every non-hidden file below it. None when
+        ``path`` is missing or its layout holds schema no data footer
+        has: a partition directory (``k=v``, whose columns inference
+        adds) or a summary file (``_metadata``, which non-merging
+        inference reads first)."""
+        root = self._path(path)
+        fs = root.getFileSystem(self._conf)
+        if not fs.exists(root):
+            return None
+        if fs.getFileStatus(root).isFile():
+            return [path]
+        files, dirs = [], [root]
+        while dirs:
+            for st in fs.listStatus(dirs.pop()):
+                p = st.getPath()
+                name = p.getName()
+                if name in ("_metadata", "_common_metadata"):
+                    return None
+                if name.startswith(("_", ".")) or name.endswith("._COPYING_"):
+                    continue
+                if not st.isDirectory():
+                    files.append(p.toString())
+                elif "=" in name:
+                    return None
+                else:
+                    dirs.append(p)
+        return sorted(files)
+
+    def read(self, files: list[str]) -> list[tuple[StructType, int]]:
+        """(schema, row count) of each parquet file's footer."""
+        out = []
+        for f in files:
+            jpath = self._path(f)
+            reader = self._open(self._input_file(jpath, self._conf), self._options)
+            try:
+                meta, rows = reader.getFooter(), reader.getRecordCount()
+            finally:
+                reader.close()
+            # nullable, as every file source's read schema is
+            jschema = self._to_schema(self._footer(jpath, meta), self._converter).asNullable()
+            out.append((StructType.fromJson(json.loads(jschema.json())), rows))
+        return out
+
+    def schema(self, footers: list[tuple[StructType, int]]) -> StructType:
+        """The schema inference gives a read of the footers' files (in
+        ``files`` order): the first file's, or with
+        ``spark.sql.parquet.mergeSchema`` on, all of them merged in
+        order, as Spark merges them."""
+        if not self.merging or len(footers) == 1:
+            return footers[0][0]
+        merged = self._from_json(footers[0][0].json())
+        for s, _ in footers[1:]:
+            merged = merged.merge(self._from_json(s.json()), self._case_sensitive)
+        return StructType.fromJson(json.loads(merged.json()))
+
+    def frame(self, path: str) -> DataFrame:
+        """``spark.read.parquet(path)`` under the schema its footers
+        give, so no inference job runs. A partitioned or empty
+        ``path`` takes Spark's inference (and its error)."""
+        files = self.files(path)
+        if not files:
+            return self.spark.read.parquet(path)
+        footers = self.read(files if self.merging else files[:1])
+        return self.spark.read.schema(self.schema(footers)).parquet(path)
+
+
 def read_folder_union_by_name(
     spark: SparkSession, folder: str, fmt: str = "parquet", schema=None
 ) -> DataFrame:
@@ -68,7 +182,7 @@ def read_folder_union_by_name(
     ``fmt="any"`` dispatches a MIXED folder per file extension
     (see ``_read_mixed_folder``).
 
-    ``schema`` (DDL string or StructType, r16 ADVICE) is the
+    ``schema`` (DDL string or StructType) is the
     schema-knowing caller's escape hatch from the inference pass: the
     folder reads as ONE multi-file scan under the declared schema —
     zero probes, zero inference jobs, each byte read exactly once —
@@ -83,7 +197,10 @@ def read_folder_union_by_name(
     Probe cost: the self-describing columnar formats (parquet/orc)
     probe every file on a driver thread pool — each probe is a footer
     READ, metadata-priced at any file size, so exhaustive
-    heterogeneity detection is cheap. The INFERENCE formats (csv/json)
+    heterogeneity detection is cheap. Parquet footers are read on the
+    driver (``ParquetFooters``), so a parquet folder launches no Spark
+    job; an ORC probe is a schema-inference job per file, plus one for
+    a homogeneous folder's scan. The INFERENCE formats (csv/json)
     route through ``_read_inference_folder`` instead: driver-side
     first-line signatures bound the job count to one distributed
     inference job per schema group (see its docstring for the
@@ -96,14 +213,14 @@ def read_folder_union_by_name(
     if not files:
         raise ValueError(f"no .{fmt} files in {folder}")
     # xlsx is not a Spark data source: route every workbook through the
-    # stdlib SpreadsheetML codec, same as the fmt="any" dispatch (the
-    # bare format("xlsx") previously crashed here, r13 review)
+    # stdlib SpreadsheetML codec, same as the fmt="any" dispatch (a
+    # bare format("xlsx") has no source to load)
     if fmt == "xlsx":
         from .excel import read_excel
 
         return union_by_name([read_excel(spark, _xlsx_local(f)) for f in files])
     # extension aliases, not registered source names: jsonl reads
-    # through the json reader (previously crashed, r13 review), and
+    # through the json reader (Spark has no "jsonl" source), and
     # txt through the text reader (one `value` column per line — the
     # plain-text corpus folder an LLM pipeline ingests; schema is
     # static, so no inference scan ever runs and the probe below is
@@ -112,7 +229,7 @@ def read_folder_union_by_name(
     # csv contract for the ad-hoc probe path: files carry a header row
     # (the reference's ingestion assumption) and types are inferred —
     # without these options header rows ingested as DATA rows and every
-    # column arrived as string (r13 review). Callers with headerless
+    # column arrived as string. Callers with headerless
     # csv read explicitly with their own options.
     opts = {"header": "true", "inferSchema": "true"} if src_fmt == "csv" else {}
     if schema is not None:
@@ -128,7 +245,7 @@ def read_folder_union_by_name(
     # text's schema is STATIC (value string) by construction: no
     # heterogeneity to detect, so skip the probe pool entirely — a
     # 100k-shard corpus is one multi-file scan with zero driver-side
-    # per-file reader constructions (r16 review)
+    # per-file reader constructions
     if src_fmt == "text":
         return spark.read.format("text").load(files)
 
@@ -138,8 +255,11 @@ def read_folder_union_by_name(
     # would parse the second path as a DDL schema string).
     # spark.read returns a FRESH DataFrameReader per access, so probe
     # threads never share a mutable builder.
-    def _probe(f: str) -> DataFrame:
-        return spark.read.format(src_fmt).options(**opts).load(f)
+    if src_fmt == "parquet":
+        _probe = ParquetFooters(spark).frame
+    else:
+        def _probe(f: str) -> DataFrame:
+            return spark.read.format(src_fmt).options(**opts).load(f)
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -150,9 +270,12 @@ def read_folder_union_by_name(
         for df in dfs
     }
     if len(schemas) == 1:
-        # homogeneous: one multi-file scan, partition-parallel,
-        # re-resolving the schema cheaply from footers
-        return spark.read.format(src_fmt).options(**opts).load(files)
+        # homogeneous: one multi-file scan, partition-parallel; parquet
+        # takes the first file's footer schema (what inference picks)
+        reader = spark.read.format(src_fmt).options(**opts)
+        if src_fmt == "parquet":
+            reader = reader.schema(dfs[0].schema)
+        return reader.load(files)
     return union_by_name(dfs)
 
 
@@ -169,7 +292,6 @@ def _first_line(spark: SparkSession, f: str) -> str | None:
     # runs too: compression codecs allocate pooled (sometimes
     # native-buffer-backed) Decompressors in createInputStream, and
     # closing only `raw` leaked one per peeked .gz shard until GC
-    # (r15 review)
     outer = raw
     try:
         codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
@@ -192,24 +314,23 @@ def _read_inference_folder(
 
     The former per-file probe pool issued N driver-serialized Spark
     jobs (one inference scan per file) and the homogeneous fast path
-    then re-read all N files (r14 review). What this path bounds is
+    then re-read all N files. What this path bounds is
     the JOB COUNT: one distributed inference job per signature group,
     independent of the file count. The inference job still reads the
     group's bytes once before the real scan reads them again — that
-    second pass is the price of loss-free schemas (the r15
-    representative-file shortcut read each group's bytes once but
-    silently dropped later-record keys); callers who know their
+    second pass is the price of loss-free schemas (a
+    representative-file shortcut would read each group's bytes once
+    but silently drop later-record keys); callers who know their
     schema skip it entirely — keeping the folder API's listing and
-    aliasing — via ``read_folder_union_by_name(..., schema=...)``
-    (r16 ADVICE).
+    aliasing — via ``read_folder_union_by_name(..., schema=...)``.
 
     Heterogeneity is DETECTED from each file's first line — a
     bounded driver-side read (header row for csv, first record's key
     set + primitive-type classes for json), no Spark jobs: files
     group by signature, and each group reads as ONE multi-file scan
     whose schema Spark infers over the WHOLE group in a single
-    distributed inference job (r15 review: the previous
-    representative-file schema silently DROPPED keys appearing only
+    distributed inference job (a representative file's schema
+    would silently DROP keys appearing only
     in later records of a sibling file — sparse/optional fields, the
     norm in scraped JSONL — and degraded same-key type conflicts to
     silent PERMISSIVE nulls). The job count stays independent of the
@@ -225,7 +346,7 @@ def _read_inference_folder(
     primitive-type classes, so files whose FIRST records already
     disagree on a shared key's type land in different groups — and
     the pre-union check below refuses the conflict STRUCTURALLY at
-    plan time (r16 ADVICE: ``unionByName`` alone coerces the string
+    plan time (``unionByName`` alone coerces the string
     side to the numeric type, so numeric-parseable strings slipped
     through silently and only non-castable values raised, at action
     time, data-dependently). Numeric widening (int/long vs
@@ -237,8 +358,6 @@ def _read_inference_folder(
     back to its own single-file inference read, preserving the old
     per-file semantics for exactly the files that need them — the
     structural conflict check covers those frames too."""
-    import json as _json
-
     def _jclass(v) -> str:
         # coarse classes: int/float group together (inference widens
         # long+double to double). None is a TYPE WILDCARD, not a
@@ -247,7 +366,7 @@ def _read_inference_folder(
         # signatures into compatible same-key-set groups — splitting
         # on null would route widen-able drift into separate groups
         # and a crash at union where one group's inference would have
-        # widened it loss-free (r16 review)
+        # widened it loss-free
         if v is None:
             return "null"
         if isinstance(v, bool):
@@ -266,7 +385,7 @@ def _read_inference_folder(
             # exact header-string identity; Spark parses the columns
             return ("csv", line)
         try:
-            rec = _json.loads(line)
+            rec = json.loads(line)
         except ValueError:
             return None
         if not isinstance(rec, dict):
@@ -313,10 +432,9 @@ def _union_compatible(a, b) -> bool:
     documented union semantics, not a conflict) and arrays/maps of
     compatible element types. String vs numeric/bool stays
     incompatible: that pair is the data-dependent cast the check
-    exists to refuse (review finding: the first cut compared
-    ``simpleString`` equality, which also refused struct field-set
-    supersets and array element widening that the union handles
-    losslessly)."""
+    exists to refuse (``simpleString`` equality would also refuse
+    struct field-set supersets and array element widening that the
+    union handles losslessly)."""
     from pyspark.sql.types import ArrayType, MapType, NullType, StructType
 
     if a == b or isinstance(a, NullType) or isinstance(b, NullType):
@@ -343,7 +461,7 @@ def _union_compatible(a, b) -> bool:
 
 def _refuse_cross_group_type_conflicts(dfs: list[DataFrame]) -> None:
     """Refuse same-name columns whose inferred types conflict ACROSS
-    the signature-group frames (r16 ADVICE): left to ``unionByName``,
+    the signature-group frames: left to ``unionByName``,
     Spark coerces the string side toward the numeric type, so a
     numeric-parseable string column ("123") unions silently and only a
     non-castable value raises — at ACTION time, data-dependently. A
@@ -351,8 +469,8 @@ def _refuse_cross_group_type_conflicts(dfs: list[DataFrame]) -> None:
     Compatibility is judged by ``_union_compatible`` (loss-free
     reconciliations pass), and names key CASE-INSENSITIVELY, matching
     the default ``spark.sql.caseSensitive=false`` resolution the union
-    itself uses (review finding: an exact-name map let "V" vs "v"
-    bypass the check and hit the action-time cast anyway).
+    itself uses (an exact-name map would let "V" vs "v" bypass the
+    check and hit the action-time cast anyway).
 
     Known-undecidable boundary: a key that is null in EVERY record of
     one group's files infers as string there, so against a numeric
@@ -389,7 +507,7 @@ def _merge_null_wildcard_groups(
     groups: dict[tuple, list[str]]
 ) -> dict[tuple, list[str]]:
     """Fold json signature groups whose first-record type classes
-    differ only through NULLS into one group (r16 review): a null
+    differ only through NULLS into one group: a null
     first-record value is absent type evidence, and the group-wide
     inference read resolves the real type loss-free — whereas keeping
     the null-bearing files apart routes widen-able later-record drift
@@ -449,16 +567,16 @@ _MIXED_READERS = ("parquet", "orc", "json", "jsonl", "xlsx", "txt", "text")
 
 
 def _read_mixed_folder(spark: SparkSession, folder: str) -> DataFrame:
-    """True mixed-format folder union (``fmt="any"`` — previously an
-    untested trap that read every file with the parquet reader, r12
-    review): each file routes through its format's reader by
-    extension, frames align by name with null fill. Unknown
+    """True mixed-format folder union (``fmt="any"``): each file routes
+    through its format's reader by extension (parquet schemas from
+    footers on the driver), frames align by name with null fill. Unknown
     extensions refuse LOUDLY with the full offending list — a silent
     skip would under-count the corpus."""
     files = hadoop_ls(spark, folder, None)
     if not files:
         raise ValueError(f"no files in {folder}")
     dfs, json_files, text_files, unknown = [], [], [], []
+    footers = ParquetFooters(spark)
     for f in files:
         name = f.rsplit("/", 1)[-1].lower()
         base, gz = (name[:-3], True) if name.endswith(".gz") else (name, False)
@@ -469,13 +587,13 @@ def _read_mixed_folder(spark: SparkSession, folder: str) -> DataFrame:
             # static schema: batched into one text scan below
             text_files.append(f)
         elif ext == "parquet":
-            dfs.append(spark.read.parquet(f))
+            dfs.append(footers.frame(f))
         elif ext == "orc":
             dfs.append(spark.read.orc(f))
         elif ext in ("json", "jsonl"):
             # collected, then read through the bounded-probe inference
             # path as ONE batch — per-file spark.read.json here was a
-            # full inference scan per file (r14 review)
+            # full inference scan per file
             json_files.append(f)
         elif ext == "xlsx":
             from .excel import read_excel

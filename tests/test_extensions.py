@@ -11,7 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE, _jobs_launched
 
 
 def test_lsh_topk_subset_and_recall(spark):
@@ -472,7 +472,8 @@ def test_multimodal_batch_shape(spark):
 
 def test_read_folder_union_by_name(spark, tmp_path):
     """Heterogeneous folder: falls back to unionByName with null fill;
-    homogeneous folder: single multi-file scan."""
+    homogeneous folder: single multi-file scan. Neither launches a job
+    to build the frame."""
     from data_finder_comparator_spark.sources.union import read_folder_union_by_name
 
     het = tmp_path / "het"
@@ -482,7 +483,13 @@ def test_read_folder_union_by_name(spark, tmp_path):
     spark.createDataFrame([(2, 3.5)], "id long, y double").write.parquet(
         str(het / "f2.parquet")
     )
-    df = read_folder_union_by_name(spark, str(het))
+    def read_without_jobs(folder):
+        # parquet schemas come from footers on the driver: no Spark job
+        out = []
+        assert _jobs_launched(spark, lambda: out.append(read_folder_union_by_name(spark, folder))) == 0
+        return out[0]
+
+    df = read_without_jobs(str(het))
     assert set(df.columns) == {"id", "x", "y"}
     rows = {r.id: (r.x, r.y) for r in df.collect()}
     assert rows[1] == ("a", None) and rows[2] == (None, 3.5)
@@ -492,7 +499,7 @@ def test_read_folder_union_by_name(spark, tmp_path):
         spark.createDataFrame([(i, "v")], "id long, x string").write.parquet(
             str(hom / f"f{i}.parquet")
         )
-    assert read_folder_union_by_name(spark, str(hom)).count() == 2
+    assert read_without_jobs(str(hom)).count() == 2
 
 
 def test_read_folder_csv_headers_and_types(spark, tmp_path):

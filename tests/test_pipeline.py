@@ -245,6 +245,49 @@ def test_streaming_config_error_launches_no_job(spark, tmp_path):
     assert _jobs_launched(spark, call) == 0
 
 
+def test_streaming_merges_probe_schemas_under_merge_schema(spark, tmp_path, monkeypatch):
+    """With ``spark.sql.parquet.mergeSchema`` in ``cfg.spark_conf`` the
+    stream's probe schema is every probe file's merged, as inference
+    merges them: a column only the second file has reaches the sink,
+    null on the first file's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_finder_comparator_spark import pipeline
+
+    search_path, folder = _write_stream_fixtures(tmp_path, n_files=1)
+    pq.write_table(
+        pa.table({"sku": ["nut-hex-m6"], "src": ["f1"], "price": [1.0], "note": ["new"]}),
+        f"{search_path}/probes-001.parquet",
+    )
+    merge = {"spark.sql.parquet.mergeSchema": "true"}
+    schemas = []
+    real_curate = pipeline._curate
+
+    def curate(spark, search, *a, **kw):
+        schemas.append(search.schema)
+        return real_curate(spark, search, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "_curate", curate)
+    sink = run_find_compare(
+        spark,
+        EngineConfig(
+            search_path=search_path,
+            data_folder=folder,
+            output_path=str(tmp_path / "out"),
+            streaming=True,
+            spark_conf=merge,
+        ),
+    )
+    notes = {r.src: r.note for r in sink.select("src", "note").distinct().collect()}
+    assert notes == {"f0": None, "f1": "new"}
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert schemas == [spark.read.parquet(search_path).schema]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
 def test_streaming_leaves_no_checkpoint(spark, tmp_path):
     """With a session-wide checkpoint location set, a streamed run
     leaves nothing under it: the drain checkpoints to its own temporary
@@ -335,10 +378,11 @@ def test_streaming_packs_files_by_pair_budget(spark, tmp_path, monkeypatch):
 
 # Job-count floor of a streamed run_find_compare against a small catalog,
 # by job-id range: per micro-batch 4 (the dense tier pass with its
-# curation, and the sink write), per call 8 more (catalog and probe
-# schema reads, catalog preparation). Counts do not move with host noise.
+# curation, and the sink write), per call 4 more (catalog preparation).
+# Catalog, probe and sink schemas come from footers on the driver and
+# cost none. Counts do not move with host noise.
 _STREAM_JOBS_PER_BATCH = 4
-_STREAM_JOBS_FIXED = 8
+_STREAM_JOBS_FIXED = 4
 
 
 def _stream_jobs(spark, tmp_path, n_files: int) -> int:
@@ -367,6 +411,13 @@ def test_streaming_job_count(spark, tmp_path, monkeypatch):
     per_batch = counts[1] - counts[0]
     assert per_batch <= _STREAM_JOBS_PER_BATCH, counts
     assert counts[0] - per_batch <= _STREAM_JOBS_FIXED, counts
+
+
+def test_read_folder_launches_no_job(spark, tmp_path):
+    """Each catalog file's schema comes from its footer on the driver,
+    so reading the folder runs no schema-inference job."""
+    _, folder = _write_fixtures(spark, tmp_path)
+    assert _jobs_launched(spark, lambda: read_folder(spark, folder)) == 0
 
 
 def test_read_folder_union_null_fills(spark, tmp_path):
