@@ -106,8 +106,6 @@ def prepare_candidates(
     # register BEFORE the stats action: a failure in that job must
     # leave both persisted frames findable by the caller's cleanup
     # path, or they pin cache-manager entries for the process lifetime
-    # (r13 review finding — fuzzy_match_stream's except-path found an
-    # empty registry when .first() raised)
     if cache_registry is not None:
         cache_registry.extend([c, matchable])
     n_cand, max_c = matchable.agg(

@@ -9,13 +9,15 @@ The GUI verdict loop (main.py:563-581) is replaced by the deterministic
 policy in ``curation_decisions`` (SURVEY.md §3.4), the O(n²)
 re-read-per-append xlsx sink by parquet append / keyed upsert, and the
 two-thread bounded-queue pipeline (main.py:501-518) by Spark's own
-pipelined execution (or the streaming wrapper in streaming/pipeline.py
-when probes arrive as a live feed).
+pipelined execution, or, when probes arrive as files of a live feed,
+by ``_drain_stream``: one micro-batch drain with replay-safe epochs.
 """
 
 from __future__ import annotations
 
+import hashlib
 import tempfile
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +37,7 @@ from .operators.fuzzy_join import (
     tiered_fuzzy_join,
 )
 from .sources.union import ParquetFooters, hadoop_ls, union_by_name
+from .streaming.pipeline import _run_to_completion
 
 
 def read_folder(spark: SparkSession, folder: str) -> DataFrame:
@@ -123,10 +126,49 @@ def _curate(
 _DENSE_EPOCH_PAIRS = 1 << 18
 
 
-def _drain_stream(spark: SparkSession, cfg: EngineConfig, prepared: PreparedCandidates) -> None:
-    """Curate the probe files under ``cfg.search_path`` in micro-batches
-    against the prepared catalog and append each to the sink; returns
-    when every file available at start has been processed.
+def _write_epoch(rows: DataFrame, sink: str, token: str, epoch_id: int) -> None:
+    """Write one micro-batch's rows into the flat parquet ``sink`` so
+    that a replay of the epoch replaces them instead of adding a second
+    copy. foreachBatch is at-least-once: a failure after this write and
+    before the checkpoint commit runs the same epoch again. The rows
+    are written to a hidden ``_stage-<token>-e<epoch>`` directory in the
+    sink, the sink files an earlier run of this epoch left (prefix
+    ``<token>-e<epoch>-``) are deleted, and the staged files are renamed
+    into the sink under that prefix. The deletes and renames are
+    driver-side FileSystem calls, not Spark jobs, and parquet readers
+    skip a staging directory a failure leaves, as they skip every
+    ``_``-prefixed name."""
+    spark = rows.sparkSession
+    prefix = f"{token}-e{epoch_id}-"
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    root = hpath(sink)
+    stage = hpath(root, f"_stage-{prefix[:-1]}").toString()
+    rows.write.mode("overwrite").parquet(stage)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    for f in hadoop_ls(spark, sink):
+        if f.rsplit("/", 1)[1].startswith(prefix):
+            fs.delete(hpath(f), False)
+    for f in hadoop_ls(spark, stage):
+        fs.rename(hpath(f), hpath(root, prefix + f.rsplit("/", 1)[1]))
+    fs.delete(hpath(stage), True)
+
+
+def _drain_stream(
+    spark: SparkSession,
+    search_path: str,
+    sink: str,
+    prepared: PreparedCandidates,
+    epoch_rows: Callable[..., DataFrame],
+    checkpoint: str | None = None,
+) -> None:
+    """Run ``epoch_rows`` over the parquet probe files under
+    ``search_path`` in micro-batches against the prepared catalog, and
+    write each epoch's rows to the parquet ``sink``; returns when every
+    file available at start has been processed. ``epoch_rows(batch,
+    cands, cache_registry=, prepared=)`` has ``tiered_fuzzy_join``'s
+    shape: ``run_find_compare`` passes ``_curate``, the
+    ``streaming_fuzzy_tiers`` query the tier join itself. The caller
+    owns ``prepared`` and releases it.
 
     One pass over the footers of the probe files present at start, on
     the driver and without a Spark job, gives the stream's schema (the
@@ -134,20 +176,31 @@ def _drain_stream(spark: SparkSession, cfg: EngineConfig, prepared: PreparedCand
     as inference gives it) and each file's row count. The epoch plan
     and size are chosen once, from those counts. When the largest file
     times ``n_cand`` is within ``_DENSE_EPOCH_PAIRS``, every epoch passes
-    ``prepared`` to the tier join and packs as many whole files as
+    ``prepared`` to ``epoch_rows`` and packs as many whole files as
     that budget holds at the largest file's size; otherwise each epoch
     is one file and runs the batch-mode plan over the prepared
     (persisted) catalog frame. A file that lands after this listing is
-    not counted. The query checkpoints to a temporary directory that is
-    deleted when the drain ends, so a session-wide
+    not counted.
+
+    Epochs are replay-safe (``_write_epoch``), so the query runs through
+    ``streaming.pipeline._run_to_completion`` and its one retry on the
+    worker-spawn failure. It checkpoints to ``checkpoint``, and a
+    restart from the same checkpoint processes only the files it has
+    not committed. Without one it checkpoints to a temporary directory
+    that is deleted when the drain ends, so a session-wide
     ``spark.sql.streaming.checkpointLocation`` collects nothing."""
+    if checkpoint is None:
+        with tempfile.TemporaryDirectory(prefix="find-compare-stream-") as ckpt:
+            return _drain_stream(
+                spark, search_path, sink, prepared, epoch_rows, Path(ckpt).as_uri()
+            )
     footers = ParquetFooters(spark)
-    files = footers.files(cfg.search_path)
+    files = footers.files(search_path)
     if files:
         probe_footers = footers.read(files)
         schema = footers.schema(probe_footers)
     else:  # partitioned or empty: Spark's inference (and its error)
-        search = spark.read.parquet(cfg.search_path)
+        search = spark.read.parquet(search_path)
         schema, probe_footers = search.schema, footers.read(search.inputFiles())
     largest = max((rows for _, rows in probe_footers), default=0)
     files_per_epoch = _DENSE_EPOCH_PAIRS // max(1, largest * prepared.n_cand)  # 0 above the gate
@@ -155,33 +208,26 @@ def _drain_stream(spark: SparkSession, cfg: EngineConfig, prepared: PreparedCand
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max(1, files_per_epoch))
-        .parquet(cfg.search_path)
+        .parquet(search_path)
     )
+    # the sink-file prefix: stable across restarts from this checkpoint,
+    # different for every other checkpoint writing to the same sink
+    ckpt = spark._jvm.org.apache.hadoop.fs.Path(checkpoint)
+    qualified = ckpt.getFileSystem(spark._jsc.hadoopConfiguration()).makeQualified(ckpt)
+    token = hashlib.sha1(qualified.toString().encode()).hexdigest()[:12]
 
     def run_batch(batch_df: DataFrame, epoch_id: int) -> None:
         reg: list = []
         try:
-            append_sink(
-                _curate(
-                    spark, batch_df, prepared.c, cfg, cache_registry=reg, prepared=epoch_prepared
-                ),
-                cfg.output_path,
-            )
+            rows = epoch_rows(batch_df, prepared.c, cache_registry=reg, prepared=epoch_prepared)
+            _write_epoch(rows, sink, token, epoch_id)
         finally:
             for cached in reg:
                 cached.unpersist()
 
-    with tempfile.TemporaryDirectory(prefix="find-compare-stream-") as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(run_batch)
-            .option("checkpointLocation", Path(ckpt).as_uri())
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    _run_to_completion(
+        stream.writeStream.foreachBatch(run_batch).option("checkpointLocation", checkpoint)
+    )
 
 
 def run_find_compare(
@@ -194,7 +240,7 @@ def run_find_compare(
 
     ``cfg.streaming=True`` (the reference's multithreading pipeline,
     T1) processes the search path as a file stream instead, whole probe
-    files per micro-batch, appended to the sink; requires
+    files per micro-batch, added to the sink; requires
     ``cfg.output_path``, checked before any Spark job. The static
     catalog is prepared ONCE before the stream starts
     (``prepare_candidates``: normalized, persisted, and its count /
@@ -207,13 +253,14 @@ def run_find_compare(
     the candidate stats job. Larger files run the batch-mode plan, one
     file per epoch. The prepared frames are released when the call
     returns or raises. The sink holds the rows that batch runs of each
-    file would write. Every parquet read on the way (catalog folder,
-    search path, returned sink) takes its schema from footers on the
-    driver, not from an inference job, so a streamed call over a small
-    catalog launches the catalog preparation's jobs plus 4 per epoch.
-    ``cfg.spark_conf`` entries are applied as runtime
-    session confs for the duration of the run and restored
-    afterwards."""
+    file would write, once each: epochs are replay-safe, and the drain
+    retries once on the worker-spawn failure (``_drain_stream``). Every
+    parquet read on the way (catalog folder, search path, returned
+    sink) takes its schema from footers on the driver, not from an
+    inference job, so a streamed call over a small catalog launches the
+    catalog preparation's jobs plus 4 per epoch. ``cfg.spark_conf``
+    entries are applied as runtime session confs for the duration of
+    the run and restored afterwards."""
     if cfg.streaming and not cfg.output_path:
         raise ValueError("streaming mode requires output_path (sink)")
     prior_conf = {k: spark.conf.get(k, None) for k in cfg.spark_conf}
@@ -228,7 +275,13 @@ def run_find_compare(
             try:
                 # static side: normalized, persisted and measured once
                 prepared = prepare_candidates(cands, cache_registry=static)
-                _drain_stream(spark, cfg, prepared)
+                _drain_stream(
+                    spark,
+                    cfg.search_path,
+                    cfg.output_path,
+                    prepared,
+                    lambda search, c, **kw: _curate(spark, search, c, cfg, **kw),
+                )
             finally:
                 for cached in static:
                     cached.unpersist()

@@ -134,18 +134,18 @@ def fuzzy_join_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct part-name catalog (threshold 3, the reference default at
     /root/reference/main.py:197 and config.ini:13).
 
-    r18 (optimization): the candidate stats are computed up front
-    (``prepare_candidates``) so the operator's dense one-pass path can
-    fire when the measured candidate count is broadcast-small — the
-    distinct part-name catalog is tiny at every harness SF, and the
-    two-phase banded plan plus the escalating ``poor`` fallback then
-    cost ~20 extra scheduler jobs per call (measured: 22 build jobs /
-    ~2.8 s of the fallback loop vs ~0.4 s for the dense action at
-    sf0.1). Results are identical by construction — the dense path is
-    the same all-four-tiers formulation the oracle states, and the
-    streaming row has hash-matched this exact oracle through it since
-    r9. At a SF where the name catalog outgrows _DENSE_CAND_MAX the
-    gate routes back to the banded two-phase plan automatically."""
+    The candidate stats are computed up front (``prepare_candidates``)
+    so the operator's dense one-pass path can fire when the measured
+    candidate count is broadcast-small — the distinct part-name catalog
+    is tiny at every harness SF, and the two-phase banded plan plus the
+    escalating ``poor`` fallback then cost ~20 extra scheduler jobs per
+    call (measured: 22 build jobs / ~2.8 s of the fallback loop vs
+    ~0.4 s for the dense action at sf0.1). Results are identical by
+    construction — the dense path is the same all-four-tiers
+    formulation the oracle states, and the streaming row hash-matches
+    this exact oracle through it. At a SF where the name catalog
+    outgrows _DENSE_CAND_MAX the gate routes back to the banded
+    two-phase plan automatically."""
     prepared = prepare_candidates(
         _part_cands(spark, sf_dir), cache_registry=CACHES
     )
@@ -250,13 +250,12 @@ def fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins (no O(P*C) full-DP cross join — the naive rank()
     formulation's plan dies at 100x).
 
-    r18 (optimization): candidate stats are computed up front
-    (``prepare_candidates``, same as the flagship) so the operator's
-    dense broadcast path fires for the broadcast-small name catalog —
-    the escalation ladder's 2 stats aggregations + persisted round +
-    eager localCheckpoint cost ~16 build jobs per call where the dense
-    plan builds zero. Above _DENSE_CAND_MAX the ladder runs
-    unchanged."""
+    Candidate stats are computed up front (``prepare_candidates``,
+    same as the flagship) so the operator's dense broadcast path fires
+    for the broadcast-small name catalog — the escalation ladder's 2
+    stats aggregations + persisted round + eager localCheckpoint cost
+    ~16 build jobs per call where the dense plan builds zero. Above
+    _DENSE_CAND_MAX the ladder runs unchanged."""
     part = load_table(spark, sf_dir, "part")
     names = part.groupBy("p_name").agg(F.min("p_partkey").alias("name_id"))
     probes = names.select(
@@ -324,7 +323,7 @@ def fuzzy_tier_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # T1 (the reference's producer/consumer pipeline, main.py:501-518) as a
 # driver-checked query: the SAME probe set flows through a bounded file
 # STREAM in disjoint micro-batches, each batch tier-joined against the
-# static candidate table and appended to a parquet sink. The tiered join
+# static candidate table and written to a parquet sink. The tiered join
 # is per-probe independent, so the union over epochs equals the batch
 # flagship result — which is why the batch flagship oracle checks it.
 # ---------------------------------------------------------------------------
@@ -332,58 +331,42 @@ def fuzzy_tier_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("streaming_fuzzy_tiers", oracle=_FLAGSHIP_ORACLE)
 def streaming_fuzzy_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fuzzy_match_stream end-to-end: probes written as 4 parquet files,
-    streamed one file per trigger (maxFilesPerTrigger — the reference's
-    Queue(maxsize=3) backpressure analogue), tier tables appended per
-    epoch via foreachBatch, drained with availableNow. Returns a scan of
-    the sink (epoch column dropped for the oracle comparison)."""
+    """The streamed drain of ``run_find_compare``
+    (``pipeline._drain_stream``) with the tier join as each epoch's
+    rows: the probes are written as 4 parquet files and drained with
+    availableNow from a checkpoint in the run directory, and each
+    epoch's tier table lands in a flat parquet sink, replay-safe. The
+    drain packs whole files into epochs of at most 2^18 probe x catalog
+    pairs, so the 4 files of 64 probes x 64 names drain in one dense
+    epoch. Returns a scan of the sink."""
     import os
+    from functools import partial
 
-    from ..streaming.pipeline import _stream_confs, fuzzy_match_stream
+    from ..pipeline import _drain_stream
+    from ..sources.union import ParquetFooters
+    from ..streaming.pipeline import _stream_confs
     from ..util import fresh_run_dir
 
     base = fresh_run_dir("fuzzy_stream", sf_dir)
     probes_dir = os.path.join(base, "probes")
     sink = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    # materialize the probe set as a 4-file stream source: each file
-    # becomes one micro-batch (disjoint probe subsets)
+    # materialize the probe set as a 4-file stream source of disjoint
+    # probe subsets
     _part_probes(spark, sf_dir).repartition(4).write.parquet(probes_dir)
-    stream = (
-        spark.readStream.schema("probe_id long, probe string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(probes_dir)
-    )
-    # the candidate table is STATIC across epochs — persist it once so
-    # each micro-batch broadcasts the cached rows instead of re-running
-    # the distinct-name aggregation (the standard cached-dimension shape
-    # for a long-running stream; released by the registry's next-query
-    # cache sweep). fuzzy_match_stream additionally precomputes the
-    # normalized/filtered candidate frames + fallback stats once
-    # (prepare_candidates) so no epoch re-runs candidate-side jobs.
-    cands = _part_cands(spark, sf_dir).persist()
-    CACHES.append(cands)
+    # the candidate table is static across epochs: normalized, persisted
+    # and measured once, and released by the registry's next-query cache
+    # sweep
+    prepared = prepare_candidates(_part_cands(spark, sf_dir), cache_registry=CACHES)
     with _stream_confs(spark):
-        q = fuzzy_match_stream(
+        _drain_stream(
             spark,
-            stream,
-            cands,
+            probes_dir,
             sink,
-            threshold=3,
-            checkpoint=ckpt,
-            available_now=True,
-            cache_registry=CACHES,
+            prepared,
+            partial(tiered_fuzzy_join, threshold=3),
+            checkpoint=os.path.join(base, "ckpt"),
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    # epoch subdirs (idempotent replay sink, r12) -> recursive scan
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(sink)
-        .select("probe_id", "probe", "cand_id", "cand", "dist", "tier")
-    )
+    return ParquetFooters(spark).frame(sink)
 
 
 # Not driven: a count over fuzzy_join_tiers, which is driven.

@@ -1,3 +1,3 @@
-from .pipeline import fuzzy_match_stream, windowed_event_counts
+from .pipeline import windowed_event_counts
 
-__all__ = ["fuzzy_match_stream", "windowed_event_counts"]
+__all__ = ["windowed_event_counts"]

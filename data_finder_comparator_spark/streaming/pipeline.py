@@ -10,9 +10,11 @@ Spark-native equivalents:
 * streaming: ``readStream`` micro-batches. Backpressure is
   ``maxFilesPerTrigger``/``maxOffsetsPerTrigger`` (bounded in-flight
   work, the Queue(3) analogue); ordered completion is micro-batch
-  ordering (T2). ``fuzzy_match_stream`` runs the flagship tiered fuzzy
-  join per micro-batch of probe keys via ``foreachBatch`` — the
-  reference's threaded matcher loop (main.py:473-478), distributed.
+  ordering (T2). The flagship tiered fuzzy join runs per micro-batch of
+  probe files in ``pipeline._drain_stream`` (``run_find_compare`` with
+  ``streaming=True``, and the ``streaming_fuzzy_tiers`` query) — the
+  reference's threaded matcher loop (main.py:473-478), distributed. It
+  drains through this module's ``_run_to_completion``.
 
 Event-time analytics the reference lacks (but a stream engine needs)
 ride on the same machinery: ``windowed_event_counts`` is a tumbling
@@ -74,8 +76,7 @@ def _stream_confs(spark: SparkSession, extra: dict[str, str] | None = None):
         # on output; those casts are wall-clock-identical ONLY in a UTC
         # session. Driver/test/bench sessions all run UTC already, so
         # this pin closes the latent dependency on ambient session TZ
-        # rather than changing any current result (r13 review, deferred
-        # to r14 by the rotation rule).
+        # rather than changing any current result.
         "spark.sql.session.timeZone": "UTC",
         **(extra or {}),
     }
@@ -94,26 +95,30 @@ def _stream_confs(spark: SparkSession, extra: dict[str, str] | None = None):
 
 
 
-# Environmental worker-spawn failure (r19): under the page-cache
-# pressure regime the r18 DSv2 probe documented, a FRESH Python worker
-# fork can stall past the JVM's HARDCODED 10 s connect-back accept
-# (PythonWorkerFactory — no conf raises it in Spark 4.1.2) and the
-# stream dies at PythonStreamingSourceRunner.init before any batch
-# runs. One retry is semantically free for every drain in this module:
-# the checkpointed availableNow restart IS the exactly-once resume
-# path these queries pin, so a retried drain delivers the identical
-# sink state. Only this exact environmental signature retries —
-# genuine query errors (schema, refusal probes, user code) surface
-# unchanged on the first strike.
+# Environmental worker-spawn failure: under page-cache pressure a
+# FRESH Python worker fork can stall past the JVM's HARDCODED 10 s
+# connect-back accept (PythonWorkerFactory — no conf raises it in
+# Spark 4.1.2), and the query dies with it, at start or in any epoch
+# whose jobs fork a worker. One retry is semantically free for every
+# drain that runs through ``_run_to_completion``: the checkpointed
+# availableNow restart skips committed epochs, and every such sink makes
+# a replayed epoch idempotent (the file sink's commit log, overwrite or
+# epoch-keyed foreachBatch writes, the register-max merge, lakehouse
+# txn markers), so a retried drain delivers the identical sink state.
+# Only this exact environmental signature retries — genuine query
+# errors (schema, refusal probes, user code) surface unchanged on the
+# first strike.
 _WORKER_SPAWN_SIGNATURE = "Python worker failed to connect back"
 
 
 def _run_to_completion(writer) -> None:
     """Start a one-shot drain (availableNow trigger: process everything
     available, then terminate — no idle trigger polling) and block
-    until it finishes. The caller scopes confs with ``_stream_confs``.
-    Retries ONCE from the same checkpoint when the host's worker-spawn
-    timeout kills the query before it runs (see _WORKER_SPAWN_SIGNATURE)."""
+    until it finishes. A caller that needs streaming confs scopes them
+    with ``_stream_confs``. Retries ONCE from the same checkpoint when the host's worker-spawn
+    timeout kills the query, whichever epoch it was in: committed
+    epochs are skipped and the failed one is replayed (see
+    _WORKER_SPAWN_SIGNATURE)."""
     import sys
 
     for attempt in (0, 1):
@@ -125,8 +130,8 @@ def _run_to_completion(writer) -> None:
             if attempt == 0 and _WORKER_SPAWN_SIGNATURE in str(e):
                 sys.stderr.write(
                     "[streaming] host worker-spawn timeout killed the "
-                    "drain before batch 0; retrying once from the same "
-                    "checkpoint (exactly-once resume)\n"
+                    "drain; retrying once from the same checkpoint "
+                    "(committed epochs skipped, the failed one replayed)\n"
                 )
                 continue
             raise
@@ -144,8 +149,7 @@ def _drain_to_parquet_sink(
     """Run an APPEND-mode streaming plan to completion into a parquet
     file sink — the shared production drain every windowed/joined
     streaming query in this module uses (checkpointed, distributed
-    write, nothing through the driver). Replaces six copy-pasted run
-    blocks (r13 review, deferred to r14 by the rotation rule)."""
+    write, nothing through the driver)."""
     confs = dict(_NANOS_CONF)
     confs.update(extra_confs or {})
     with _stream_confs(spark, confs):
@@ -482,7 +486,7 @@ def first_seen_to_parquet(
     between the sink write and the checkpoint commit, the whole epoch
     replays with the SAME epoch_id — and the replay re-runs against the
     PRE-epoch state version, re-emitting the same first-seen keys. A
-    blind append would duplicate them (r12 review); mode("overwrite")
+    blind append would duplicate them; mode("overwrite")
     into ``out/e<epoch_id>`` makes the replay rewrite its own directory
     instead — idempotent sink, exactly-once results. At 100 TB the
     emission set is corpus-sized (one row per distinct content hash);
@@ -495,7 +499,7 @@ def first_seen_to_parquet(
     # folder) would otherwise make the final explicit-schema read crash
     # PATH_NOT_FOUND instead of returning the correct empty frame —
     # the format('parquet') sinks get this for free because start()
-    # creates their directory (r13 review finding)
+    # creates their directory
     os.makedirs(out_path, exist_ok=True)
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -516,130 +520,6 @@ def first_seen_to_parquet(
     )
 
 
-def fuzzy_match_stream(
-    spark: SparkSession,
-    probe_stream: DataFrame,
-    cand: DataFrame,
-    sink_path: str,
-    threshold: int = 3,
-    checkpoint: str | None = None,
-    available_now: bool = False,
-    cache_registry: list | None = None,
-):
-    """T1: per-micro-batch tiered fuzzy join via foreachBatch. The
-    candidate table is broadcast once per batch; each batch's tier
-    table appends to a parquet sink (exactly-once per epoch under
-    checkpointing in a real deployment; Delta MERGE would give the
-    Replace-upsert variant).
-
-    The candidate side is STATIC across the stream's lifetime, so its
-    normalization, null-filter, and the escalation fallback's fused
-    count/max-length stats are computed ONCE here (prepare_candidates)
-    before the stream starts — each epoch's tiered join reuses the
-    persisted frames and scalar stats instead of re-running ~2 extra
-    candidate-side jobs per micro-batch. Pass ``cache_registry`` (a
-    list) to take ownership of the two prepared-candidate cached
-    tables (unpersist them after the stream stops); WITHOUT a registry
-    the function owns them and unpersists on the query's termination
-    event, so short-lived callers can't leak cached blocks by default.
-
-    Returns the started StreamingQuery (caller drives/stops it). With
-    ``available_now`` the trigger drains everything available then
-    terminates — the bounded-run shape the driver-checked query uses;
-    ``checkpoint`` + the epoch-keyed overwrite sink make epochs
-    exactly-once across restarts (the checkpoint alone only makes
-    delivery at-least-once; idempotent epoch dirs close the sink side).
-    """
-    from ..operators.fuzzy_join import prepare_candidates, tiered_fuzzy_join
-
-    own_registry = cache_registry is None
-    if own_registry:
-        cache_registry = []
-    prepared = prepare_candidates(cand, cache_registry=cache_registry)
-
-    def run_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # registry: persist within THIS batch (phase 1 evaluates once,
-        # not three times), unpersist right after the write so blocks
-        # never accumulate across a long-running stream
-        reg: list = []
-        tiers = tiered_fuzzy_join(
-            batch_df, cand, threshold=threshold, cache_registry=reg,
-            prepared=prepared,
-        )
-        try:
-            # epoch-keyed overwrite, not blind append: foreachBatch is
-            # at-least-once, and a crash between this write and the
-            # checkpoint commit replays the SAME epoch_id — the replay
-            # rewrites its own subdir instead of duplicating the tier
-            # table (r12 review; readers scan the sink with
-            # recursiveFileLookup)
-            tiers.withColumn("epoch", F.lit(int(epoch_id))).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(sink_path, f"e{int(epoch_id):09d}"))
-        finally:
-            for df in reg:
-                df.unpersist()
-
-    writer = probe_stream.writeStream.foreachBatch(run_batch)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    try:
-        started = writer.start()
-    except Exception:
-        # start() can fail before any termination listener exists (bad
-        # checkpoint path, invalid sink): release the prepared-candidate
-        # caches we own or they stay pinned until driver GC (r12 review)
-        if own_registry:
-            for df in cache_registry:
-                df.unpersist()
-        raise
-    if own_registry:
-        listener = _release_on_termination(spark, str(started.id), cache_registry)
-        # the termination event is only delivered to listeners registered
-        # BEFORE it is posted; a fast availableNow query can terminate in
-        # the gap between start() and addListener. Unpersist is
-        # idempotent, so the belt-and-suspenders direct release closes
-        # the race (worst case both paths release the same frames, and
-        # the orphaned listener is removed here instead of by itself).
-        if not started.isActive:
-            for df in cache_registry:
-                df.unpersist()
-            spark.streams.removeListener(listener)
-    return started
-
-
-def _release_on_termination(spark: SparkSession, query_id: str, frames: list):
-    """Unpersist ``frames`` when the streaming query with ``query_id``
-    terminates, then deregister — the opt-out cache hygiene behind
-    fuzzy_match_stream's registry-less path. Returns the registered
-    listener so the caller can remove it if the query already
-    terminated before registration (unpersist is idempotent, so the
-    two release paths compose safely)."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Release(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            pass
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            if str(event.id) == query_id:
-                for df in frames:
-                    df.unpersist()
-                spark.streams.removeListener(self)
-
-    listener = _Release()
-    spark.streams.addListener(listener)
-    return listener
-
-
 STREAM_JOIN_SCHEMA = "purchase_id long, user_id long, click_id long, gap_us long"
 
 
@@ -651,8 +531,7 @@ def _attribution_join(
     window, BOTH sides watermarked so the state store evicts a buffered
     row as soon as the other stream's watermark passes the end of its
     match window — bounded state on an unbounded stream. The inner and
-    leftOuter variants differ only in join type and output projection
-    (previously two full copies of this plan, r13 review)."""
+    leftOuter variants differ only in join type and output projection."""
     purchases = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -907,7 +786,7 @@ def stream_merge_into_table(
     table_kwargs: dict | None = None,
 ):
     """Exactly-once streaming upsert into the transactional lakehouse
-    table (round 9). foreachBatch delivery is AT-LEAST-ONCE: after a
+    table. foreachBatch delivery is AT-LEAST-ONCE: after a
     crash between the sink's side effect and the checkpoint commit,
     Structured Streaming replays the whole micro-batch with the SAME
     epoch_id. Each epoch therefore merges with a (txn_app, epoch_id)
@@ -923,7 +802,7 @@ def stream_merge_into_table(
     not the table.
 
     ``auto_optimize_every=N`` compacts small files after every Nth
-    epoch (round 10): each micro-batch commits its own txn files, so
+    epoch: each micro-batch commits its own txn files, so
     an unattended stream accretes one small file per epoch and dies
     by open() overhead long before data volume — the auto-compaction
     every streaming table sink ends up needing. The optimize commit is
@@ -955,7 +834,7 @@ def stream_merge_into_table(
     # (sized for state-store instance overhead) would only throttle the
     # per-epoch merge/optimize jobs' parallelism on the table's hot
     # path — those run as ordinary batch jobs inside foreachBatch and
-    # should keep the session's width (r13 review finding)
+    # should keep the session's width
     _run_to_completion(
         stream_df.writeStream.foreachBatch(commit_epoch)
         .option("checkpointLocation", checkpoint)

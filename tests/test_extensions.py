@@ -71,11 +71,37 @@ def test_curation_sink_roundtrip(spark):
         assert set(back.columns) == set(curated.columns)
 
 
+def _drain_tiers(spark, probes_dir, cand, sink, checkpoint=None) -> None:
+    """The streamed tier join: ``run_find_compare``'s drain with
+    ``tiered_fuzzy_join`` (threshold 3) as each epoch's rows, over a
+    catalog prepared once and released when the drain ends."""
+    from functools import partial
+
+    from data_finder_comparator_spark.operators.fuzzy_join import (
+        prepare_candidates,
+        tiered_fuzzy_join,
+    )
+    from data_finder_comparator_spark.pipeline import _drain_stream
+
+    reg: list = []
+    try:
+        prepared = prepare_candidates(cand, cache_registry=reg)
+        _drain_stream(
+            spark,
+            str(probes_dir),
+            sink,
+            prepared,
+            partial(tiered_fuzzy_join, threshold=3),
+            checkpoint=checkpoint,
+        )
+    finally:
+        for df in reg:
+            df.unpersist()
+
+
 def test_streaming_fuzzy_pipeline(spark, tmp_path):
     """T1 micro-batch pipeline: stream probe keys from files, fuzzy-join
-    each batch against a static candidate table, append to a sink."""
-    from data_finder_comparator_spark.streaming.pipeline import fuzzy_match_stream
-
+    each batch against a static candidate table, write to a sink."""
     probes_dir = tmp_path / "probes"
     spark.createDataFrame(
         [(1, "cold widgetx"), (2, "old widget")], "probe_id long, probe string"
@@ -83,67 +109,12 @@ def test_streaming_fuzzy_pipeline(spark, tmp_path):
     cand = spark.createDataFrame(
         [(10, "cold widget"), (11, "old widget")], "cand_id long, cand string"
     )
-    stream = (
-        spark.readStream.schema("probe_id long, probe string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(probes_dir))
-    )
     sink = str(tmp_path / "sink")
-    reg: list = []
-    q = fuzzy_match_stream(spark, stream, cand, sink, threshold=3, cache_registry=reg)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        for df in reg:
-            df.unpersist()
-    out = (
-        spark.read.option("recursiveFileLookup", "true").parquet(sink).collect()
-    )
+    _drain_tiers(spark, probes_dir, cand, sink)
+    out = spark.read.parquet(sink).collect()
     tiers = {(r.probe_id, r.cand_id, r.tier) for r in out}
     assert (2, 11, "exact") in tiers
     assert (1, 10, "best") in tiers
-
-
-def test_streaming_fuzzy_registryless_releases_caches(spark, tmp_path):
-    """Without a cache_registry, fuzzy_match_stream owns the two
-    prepared-candidate cached tables and unpersists them when the query
-    terminates (listener-driven), so short-lived callers can't leak
-    cached blocks — the safe-by-default behavior, not opt-in."""
-    import time
-
-    from data_finder_comparator_spark.streaming.pipeline import fuzzy_match_stream
-
-    def n_cached() -> int:
-        jsc = spark.sparkContext._jsc
-        return jsc.getPersistentRDDs().size()
-
-    probes_dir = tmp_path / "probes_nr"
-    spark.createDataFrame(
-        [(1, "cold widgetx")], "probe_id long, probe string"
-    ).write.parquet(str(probes_dir))
-    cand = spark.createDataFrame(
-        [(10, "cold widget")], "cand_id long, cand string"
-    )
-    stream = spark.readStream.schema("probe_id long, probe string").parquet(
-        str(probes_dir)
-    )
-    before = n_cached()
-    q = fuzzy_match_stream(
-        spark,
-        stream,
-        cand,
-        str(tmp_path / "sink_nr"),
-        threshold=3,
-        available_now=True,
-    )
-    q.awaitTermination()
-    q.stop()
-    # the release listener runs on the listener-bus thread; poll
-    deadline = time.time() + 15
-    while n_cached() > before and time.time() < deadline:
-        time.sleep(0.2)
-    assert n_cached() <= before, "prepared-candidate caches leaked"
 
 
 def test_upsert_sink_merge_semantics(spark, tmp_path):
@@ -2397,8 +2368,6 @@ def test_streaming_checkpoint_restart_no_reprocessing(spark, tmp_path):
     produce output. A broken checkpoint contract would re-emit the
     first files' tiers as duplicates; each probe must appear exactly
     once per matched candidate."""
-    from data_finder_comparator_spark.streaming.pipeline import fuzzy_match_stream
-
     probes_dir = tmp_path / "probes_ckpt"
     probes_dir.mkdir()
     cand = spark.createDataFrame(
@@ -2418,42 +2387,17 @@ def test_streaming_checkpoint_restart_no_reprocessing(spark, tmp_path):
         shutil.copy(src, str(probes_dir / f"{name}.parquet"))
 
     def run_once():
-        stream = (
-            spark.readStream.schema("probe_id long, probe string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(probes_dir))
-        )
-        reg: list = []
-        q = fuzzy_match_stream(
-            spark,
-            stream,
-            cand,
-            sink,
-            threshold=3,
-            checkpoint=ckpt,
-            available_now=True,
-            cache_registry=reg,
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-            for df in reg:
-                df.unpersist()
+        _drain_tiers(spark, probes_dir, cand, sink, checkpoint=ckpt)
 
     write_probe_file("a", [(1, "cold widgetx")])
     write_probe_file("b", [(2, "old widget")])
     run_once()
-    first = (
-        spark.read.option("recursiveFileLookup", "true").parquet(sink).count()
-    )
+    first = spark.read.parquet(sink).count()
     assert first > 0
     write_probe_file("c", [(3, "cold widget")])
     write_probe_file("d", [(4, "bold widget")])
     run_once()
-    rows = (
-        spark.read.option("recursiveFileLookup", "true").parquet(sink).collect()
-    )
+    rows = spark.read.parquet(sink).collect()
     by_probe = {}
     for r in rows:
         by_probe.setdefault(r.probe_id, []).append((r.cand_id, r.tier))
@@ -3695,18 +3639,14 @@ def test_index_rebuild_and_misrooted_store_refuse(spark, tmp_path):
 
 
 def test_fuzzy_stream_sink_idempotent_under_epoch_replay(spark, tmp_path):
-    """r12 review: foreachBatch is at-least-once — a crash between the
-    sink write and the checkpoint commit replays the whole epoch with
-    the same epoch_id. The epoch-keyed overwrite sink must make that
-    replay a rewrite, not a duplicate append. Simulated by deleting the
-    newest checkpoint commit marker after a clean run and restarting:
+    """foreachBatch is at-least-once — a crash between the sink write
+    and the checkpoint commit replays the whole epoch with the same
+    epoch_id. The drain's replay-safe epoch write must make that replay
+    a rewrite, not a duplicate append. Simulated by deleting the newest
+    checkpoint commit marker after a clean run and restarting:
     Structured Streaming re-executes the uncommitted epoch."""
     import glob
     import os
-
-    from data_finder_comparator_spark.streaming.pipeline import (
-        fuzzy_match_stream,
-    )
 
     probes_dir = tmp_path / "probes"
     probes_dir.mkdir()
@@ -3726,40 +3666,13 @@ def test_fuzzy_stream_sink_idempotent_under_epoch_replay(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run_once():
-        stream = (
-            spark.readStream.schema("probe_id long, probe string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(probes_dir))
-        )
-        reg: list = []
-        q = fuzzy_match_stream(
-            spark, stream, cand, sink,
-            threshold=3, checkpoint=ckpt, available_now=True,
-            cache_registry=reg,
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-            # stop() is async and Spark 4 refuses a restart while the
-            # old run still holds the checkpoint — wait it out
-            import time as _time
-
-            for _ in range(200):
-                if not q.isActive:
-                    break
-                _time.sleep(0.05)
-            for df in reg:
-                df.unpersist()
+        _drain_tiers(spark, probes_dir, cand, sink, checkpoint=ckpt)
 
     run_once()
     read = lambda: sorted(
         map(
             tuple,
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(sink)
-            .select("probe_id", "cand_id", "tier", "epoch")
-            .collect(),
+            spark.read.parquet(sink).select("probe_id", "cand_id", "tier").collect(),
         )
     )
     clean = read()

@@ -1953,15 +1953,17 @@ def test_lakehouse_randomized_concurrent_writers_serialize(spark, tmp_path):
 def test_lakehouse_randomized_concurrent_writers_serialize_on_http_store(
     spark, tmp_path, monkeypatch
 ):
-    """r14 (r13 verdict item 6): the randomized two-writer
-    serialization test run over the WIRE — both writers race their
-    conditional-PUT commit claims through the real loopback HTTP
-    server — with faults injected into the driver-side control plane:
-    every 7th request 503s before reaching the server (the retry
-    path), and every 11th conditional PUT is APPLIED server-side with
-    its response dropped (the S3 ambiguity: the retry sees 412 against
-    the writer's own bytes and must resolve the claim WON by
+    """The randomized two-writer serialization test run over the
+    WIRE — both writers race their conditional-PUT commit claims
+    through the real loopback HTTP server — with faults injected into
+    the driver-side control plane: every 7th request 503s before
+    reaching the server (the retry path), and the writers' first
+    conditional PUT, then every 11th after it, is APPLIED server-side
+    with its response dropped (the S3 ambiguity: the retry sees 412
+    against the writer's own bytes and must resolve the claim WON by
     read-back, mid-race against the other writer's genuine claims).
+    Claims are counted from the first one a writer thread makes, so
+    the drop fires however the threads interleave.
     Disjoint-key ops commute, so the final table must still equal each
     writer's local replay, with a gapless parent chain — the
     serialization invariant is store-independent."""
@@ -1982,7 +1984,8 @@ def test_lakehouse_randomized_concurrent_writers_serialize_on_http_store(
     server, base = serve_store_http(backing)
     real_build = urllib.request.build_opener
     counter = itertools.count(1)
-    claims = itertools.count(1)  # conditional PUTs only
+    claims = itertools.count()  # the writer threads' conditional PUTs
+    writers_started = threading.Event()
     lock = threading.Lock()
     injected = {"dropped": 0, "throttled": 0}
 
@@ -1992,7 +1995,11 @@ def test_lakehouse_randomized_concurrent_writers_serialize_on_http_store(
 
         def open(self, req, timeout=None):
             method = req.get_method() if hasattr(req, "get_method") else "GET"
-            claim = method == "PUT" and req.has_header("If-none-match")
+            claim = (
+                method == "PUT"
+                and req.has_header("If-none-match")
+                and writers_started.is_set()
+            )
             with lock:
                 n = next(counter)
                 c = next(claims) if claim else 0
@@ -2068,6 +2075,7 @@ def test_lakehouse_randomized_concurrent_writers_serialize_on_http_store(
                 errors.append((w, repr(e)))
 
         threads = [threading.Thread(target=writer, args=(w,)) for w in (0, 1)]
+        writers_started.set()
         for th in threads:
             th.start()
         for th in threads:

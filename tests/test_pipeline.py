@@ -376,6 +376,62 @@ def test_streaming_packs_files_by_pair_budget(spark, tmp_path, monkeypatch):
     assert rows(one_per_file) == rows(sink)
 
 
+def test_streaming_epoch_replay_writes_rows_once(spark, tmp_path, monkeypatch):
+    """An epoch whose rows reached the sink and which then failed with
+    the worker-spawn signature is run again by the drain's one retry,
+    from the call's temporary checkpoint. The replay replaces the
+    epoch's files, so the sink holds a batch run's rows exactly once,
+    and it stays readable as a flat folder by Spark and by pyarrow."""
+    import pyarrow.parquet as pq
+
+    from data_finder_comparator_spark import pipeline
+
+    failed = []
+    real_write = pipeline._write_epoch
+
+    def write_then_fail(*a):
+        real_write(*a)
+        if not failed:
+            failed.append(a[-1])
+            raise RuntimeError("Python worker failed to connect back")
+
+    monkeypatch.setattr(pipeline, "_write_epoch", write_then_fail)
+    search_path, folder = _write_stream_fixtures(tmp_path)
+    out = str(tmp_path / "stream_out")
+    sink = run_find_compare(
+        spark,
+        EngineConfig(
+            search_path=search_path,
+            data_folder=folder,
+            output_path=out,
+            threshold=3,
+            streaming=True,
+            output_distances=True,
+        ),
+    )
+    assert failed == [0]
+
+    def rows(df):
+        return sorted(map(repr, df.select(sorted(df.columns)).collect()))
+
+    n = 0
+    for i in range(2):
+        batch = run_find_compare(
+            spark,
+            EngineConfig(
+                search_path=f"{search_path}/probes-{i:03d}.parquet",
+                data_folder=folder,
+                threshold=3,
+                output_distances=True,
+            ),
+        )
+        assert rows(sink.filter(F.col("src") == f"f{i}")) == rows(batch)
+        n += batch.count()
+    assert sink.count() == n
+    assert spark.read.parquet(out).count() == n
+    assert pq.read_table(out).num_rows == n
+
+
 # Job-count floor of a streamed run_find_compare against a small catalog,
 # by job-id range: per micro-batch 4 (the dense tier pass with its
 # curation, and the sink write), per call 4 more (catalog preparation).
