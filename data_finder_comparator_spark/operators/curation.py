@@ -6,52 +6,54 @@ or Replace (update the key cell, then append) into an xlsx sink
 replaces the interactive verdict with a deterministic policy (SURVEY.md
 §3.4) and the O(n²) re-read-per-append sink with parquet append:
 
-* ``curation_decisions`` — per probe: keep if an exact match exists,
-  replace with the best match when it is unique, else keep.
+* ``replaces`` — the policy, stated once: keep if an exact match
+  exists, replace with the best match when it is unique, else keep.
+  ``pipeline._curate`` applies it per distinct probe key from match
+  counts; ``curation_decisions`` per probe row from a tier table.
 * ``apply_curation`` — the point-update (P5: when/otherwise on the key
-  column, no positional rows) producing the curated table.
+  column, no positional rows) of a tier table's decisions, joined back
+  by probe id.
 * ``append_sink`` — ``mode("append")`` parquet write: header-once and
   offset bookkeeping are free (vs main.py:530-533's full re-read).
-* ``with_row_ids`` — deterministic dense row ids (P4). Spark has no
-  positional rows; a total order must be imposed. Global ids funnel
-  through one partition — fine for small curated outputs, wrong for
-  facts; partition the window whenever a grouping key exists.
+* ``with_row_ids`` — deterministic dense row ids (P4) for callers that
+  need positional identity. Spark has no positional rows; a total
+  order must be imposed. Global ids funnel through one partition —
+  fine for small outputs, wrong for facts; partition the window
+  whenever a grouping key exists. Curation itself needs none: a
+  decision depends only on the probe's key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.union import ParquetFooters
 
 
+def replaces(n_exact: Column, n_best: Column) -> Column:
+    """The keep/replace policy over a probe's match counts: replace the
+    key only when no exact match exists and exactly one candidate is
+    best (main.py:538-553); keep it otherwise."""
+    return (n_exact == 0) & (n_best == 1)
+
+
 def curation_decisions(tiers: DataFrame) -> DataFrame:
     """Collapse a tiered fuzzy-join result (OUT_COLS of
-    ``tiered_fuzzy_join``) into one decision row per probe:
-
-    action='keep'    when an exact match exists (probe key already
-                     canonical), or when no unique best exists;
-    action='replace' when exactly one 'best' candidate exists — its
-                     value becomes the new key (main.py:538-553).
-    """
+    ``tiered_fuzzy_join``) into one decision row per probe, by the
+    ``replaces`` policy: action 'replace' with the best candidate's
+    value as the new key, or 'keep' with the probe's own."""
     agg = tiers.groupBy("probe_id", "probe").agg(
         F.sum(F.when(F.col("tier") == "exact", 1).otherwise(0)).alias("n_exact"),
         F.sum(F.when(F.col("tier") == "best", 1).otherwise(0)).alias("n_best"),
         F.max(F.when(F.col("tier") == "best", F.col("cand"))).alias("best_cand"),
     )
+    replace = replaces(F.col("n_exact"), F.col("n_best"))
     return agg.select(
         "probe_id",
         "probe",
-        F.when(F.col("n_exact") > 0, F.lit("keep"))
-        .when(F.col("n_best") == 1, F.lit("replace"))
-        .otherwise(F.lit("keep"))
-        .alias("action"),
-        F.when(
-            (F.col("n_exact") == 0) & (F.col("n_best") == 1), F.col("best_cand")
-        )
-        .otherwise(F.col("probe"))
-        .alias("final_key"),
+        F.when(replace, F.lit("replace")).otherwise(F.lit("keep")).alias("action"),
+        F.when(replace, F.col("best_cand")).otherwise(F.col("probe")).alias("final_key"),
     )
 
 

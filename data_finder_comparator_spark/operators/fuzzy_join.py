@@ -25,7 +25,9 @@ Scale design (this is where the Spark version stops being a loop):
   levenshtein(a,b) >= |len(a)-len(b)|, so nothing outside the band can
   be within threshold. Scoring uses the threshold form
   ``levenshtein(a, b, t)`` (Spark >= 3.5) which early-exits the DP at
-  O(len * t) instead of O(len^2).
+  O(len * t) instead of O(len^2). It is one helper, ``within_pairs``,
+  which ``pipeline._curate`` also runs on its own, since curation reads
+  only the within-threshold pairs.
 * Phase 2 (the ``poor`` fallback — a full-candidate global argmin, like
   the reference's rescan at main.py:222-228, but only over the minority
   of probes with no within-threshold pair). It runs the escalation
@@ -194,7 +196,86 @@ def tiered_fuzzy_join(
     ):
         return _dense_tiers(p, c, t)
 
-    # ---- Phase 1: within-threshold pairs via blocking ----
+    within = within_pairs(p, c, t, strategy, dedup_strings)
+    # consumed twice (tier classification + matched-probe anti-join);
+    # persist so the banded scoring pass runs once, not twice — at
+    # cluster scale this would be a checkpoint/exchange reuse
+    within = within.persist()
+    if cache_registry is not None:
+        cache_registry.append(within)
+
+    w = Window.partitionBy("probe_id")
+    within = within.withColumn(
+        "min_pos", F.min(F.when(F.col("dist") > 0, F.col("dist"))).over(w)
+    )
+    tiers_within = within.withColumn(
+        "tier",
+        F.when(F.col("dist") == 0, F.lit("exact"))
+        .when(F.col("dist") == F.col("min_pos"), F.lit("best"))
+        .otherwise(F.lit("potential")),
+    ).select(*OUT_COLS)
+
+    # ---- Phase 2: global-argmin fallback ("poor") for probes with no
+    # positive within-threshold match (reference main.py:218-228).
+    #
+    # Split by what phase 1 already proved:
+    # * probe HAS a within-band pair but none positive — every such pair
+    #   is dist 0, so the global min is 0 and its argmin ties are
+    #   exactly those dist-0 rows (out-of-band candidates are all
+    #   > t >= 0). Emit them as ``poor`` straight from phase 1 — this is
+    #   the reference's exact∩poor overlap, with NO rescan.
+    # * probe has NO within-band pair at all — the global min exceeds t
+    #   and genuinely requires a full-candidate argmin. Resolved by
+    #   escalating band widening (below), NOT a |P|x|C| cross join: in
+    #   adversarial inputs (probe set from a different catalog) ALL
+    #   probes fall through, and a cartesian there is the one plan that
+    #   cannot survive 100 TB.
+    poor_exact = (
+        within.filter(F.col("min_pos").isNull())
+        .withColumn("tier", F.lit("poor"))
+        .select(*OUT_COLS)
+    )
+    seen = within.select("probe_id").distinct()
+    unseen = p.join(seen, "probe_id", "left_anti")
+
+    def keep_argmin(scored: DataFrame, final: bool) -> DataFrame:
+        # any survivor beats every non-survivor, so a probe's surviving
+        # argmin ties are its global argmin ties
+        return (
+            scored.withColumn("_min", F.min("dist").over(w))
+            .filter(F.col("dist") == F.col("_min"))
+            .withColumn("tier", F.lit("poor"))
+            .select(*OUT_COLS)
+        )
+
+    poor_rescan = _escalate(
+        unseen,
+        c,
+        prepared,
+        width=max(2 * t, 2),
+        broadcast_cand=strategy == "broadcast",
+        keep=keep_argmin,
+        extra=T.StructField("tier", T.StringType()),
+    )
+
+    return tiers_within.unionByName(poor_exact).unionByName(poor_rescan)
+
+
+def within_pairs(
+    p: DataFrame,
+    c: DataFrame,
+    t: int,
+    strategy: str,
+    dedup_strings: bool | str = False,
+    probe_key: str = "probe_id",
+    cand_key: str = "cand_id",
+) -> DataFrame:
+    """Phase 1: every (probe, candidate) pair within ``t`` edits after
+    normalization, blocked by ``strategy``, with every column of both
+    sides plus ``dist`` (long). ``p`` carries ``_nq`` and ``c``
+    carries ``_nc`` (the normalized keys); ``probe_key`` and
+    ``cand_key`` name a unique key of each side, which the qgram
+    strategy joins the candidate pairs back on."""
     if strategy == "qgram":
         # Prefix filtering on q-grams (AllPairs/PPJoin candidate
         # generation, exact for edit distance): one edit destroys at
@@ -260,8 +341,8 @@ def tiered_fuzzy_join(
             p_src, p_key = long_p.select("_nq").distinct(), "_nq"
             c_src, c_key = c.select("_nc").distinct(), "_nc"
         else:
-            p_src, p_key = long_p, "probe_id"
-            c_src, c_key = c, "cand_id"
+            p_src, p_key = long_p, probe_key
+            c_src, c_key = c, cand_key
         cg = _grams(c_src.filter(F.length("_nc") >= qg), c_key, "_nc", "_lc")
         pg = _grams(p_src, p_key, "_nq", "_lq")
         gram_df = cg.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
@@ -287,7 +368,7 @@ def tiered_fuzzy_join(
             ).filter(F.col("dist") >= 0)
             banded_long = scored_strs.join(long_p, "_nq").join(c, "_nc")
         else:
-            banded_long = pair_ids.join(long_p, "probe_id").join(c, "cand_id")
+            banded_long = pair_ids.join(long_p, probe_key).join(c, cand_key)
         c_short = c.filter(F.length("_nc") < min_len + t).withColumn(
             "_band",
             F.explode(
@@ -297,7 +378,7 @@ def tiered_fuzzy_join(
         banded_short = (
             short_p.withColumn("_band", F.length("_nq")).join(c_short, "_band").drop("_band")
         )
-        cols = ["probe_id", "probe", "_nq", "cand_id", "cand", "_nc"]
+        cols = [*p.columns, *c.columns]
         if dedup_strings:
             # long side is already scored per distinct string pair;
             # score the (tiny) short-probe side and skip the shared
@@ -335,74 +416,10 @@ def tiered_fuzzy_join(
         )
 
     if banded is None:  # qgram dedup_strings: DP already paid per string pair
-        within = prescored
-    else:
-        within = (
-            banded.withColumn("dist", F.levenshtein("_nq", "_nc", t).cast("long"))
-            .filter(F.col("dist") >= 0)
-        )
-    # consumed twice (tier classification + matched-probe anti-join);
-    # persist so the banded scoring pass runs once, not twice — at
-    # cluster scale this would be a checkpoint/exchange reuse
-    within = within.persist()
-    if cache_registry is not None:
-        cache_registry.append(within)
-
-    w = Window.partitionBy("probe_id")
-    within = within.withColumn(
-        "min_pos", F.min(F.when(F.col("dist") > 0, F.col("dist"))).over(w)
+        return prescored
+    return banded.withColumn("dist", F.levenshtein("_nq", "_nc", t).cast("long")).filter(
+        F.col("dist") >= 0
     )
-    tiers_within = within.withColumn(
-        "tier",
-        F.when(F.col("dist") == 0, F.lit("exact"))
-        .when(F.col("dist") == F.col("min_pos"), F.lit("best"))
-        .otherwise(F.lit("potential")),
-    ).select(*OUT_COLS)
-
-    # ---- Phase 2: global-argmin fallback ("poor") for probes with no
-    # positive within-threshold match (reference main.py:218-228).
-    #
-    # Split by what phase 1 already proved:
-    # * probe HAS a within-band pair but none positive — every such pair
-    #   is dist 0, so the global min is 0 and its argmin ties are
-    #   exactly those dist-0 rows (out-of-band candidates are all
-    #   > t >= 0). Emit them as ``poor`` straight from phase 1 — this is
-    #   the reference's exact∩poor overlap, with NO rescan.
-    # * probe has NO within-band pair at all — the global min exceeds t
-    #   and genuinely requires a full-candidate argmin. Resolved by
-    #   escalating band widening (below), NOT a |P|x|C| cross join: in
-    #   adversarial inputs (probe set from a different catalog) ALL
-    #   probes fall through, and a cartesian there is the one plan that
-    #   cannot survive 100 TB.
-    poor_exact = (
-        within.filter(F.col("min_pos").isNull())
-        .withColumn("tier", F.lit("poor"))
-        .select(*OUT_COLS)
-    )
-    seen = within.select("probe_id").distinct()
-    unseen = p.join(seen, "probe_id", "left_anti")
-
-    def keep_argmin(scored: DataFrame, final: bool) -> DataFrame:
-        # any survivor beats every non-survivor, so a probe's surviving
-        # argmin ties are its global argmin ties
-        return (
-            scored.withColumn("_min", F.min("dist").over(w))
-            .filter(F.col("dist") == F.col("_min"))
-            .withColumn("tier", F.lit("poor"))
-            .select(*OUT_COLS)
-        )
-
-    poor_rescan = _escalate(
-        unseen,
-        c,
-        prepared,
-        width=max(2 * t, 2),
-        broadcast_cand=strategy == "broadcast",
-        keep=keep_argmin,
-        extra=T.StructField("tier", T.StringType()),
-    )
-
-    return tiers_within.unionByName(poor_exact).unionByName(poor_rescan)
 
 
 # Candidate-count ceiling for the dense one-pass tier path: well under

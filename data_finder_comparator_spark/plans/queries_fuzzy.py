@@ -336,11 +336,11 @@ def streaming_fuzzy_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows: the probes are written as 4 parquet files and drained with
     availableNow from a checkpoint in the run directory, and each
     epoch's tier table lands in a flat parquet sink, replay-safe. The
-    drain packs whole files into epochs of at most 2^18 probe x catalog
-    pairs, so the 4 files of 64 probes x 64 names drain in one dense
-    epoch. Returns a scan of the sink."""
+    epoch callable joins against the catalog prepared once here, as
+    ``fuzzy_join_tiers`` does, so an epoch takes the dense one-pass
+    path; the 4 files of 64 probes x 64 names drain in one epoch, which
+    takes every available file. Returns a scan of the sink."""
     import os
-    from functools import partial
 
     from ..pipeline import _drain_stream
     from ..sources.union import ParquetFooters
@@ -362,8 +362,9 @@ def streaming_fuzzy_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             probes_dir,
             sink,
-            prepared,
-            partial(tiered_fuzzy_join, threshold=3),
+            lambda batch, reg: tiered_fuzzy_join(
+                batch, prepared.c, threshold=3, cache_registry=reg, prepared=prepared
+            ),
             checkpoint=os.path.join(base, "ckpt"),
         )
     return ParquetFooters(spark).frame(sink)

@@ -75,8 +75,6 @@ def _drain_tiers(spark, probes_dir, cand, sink, checkpoint=None) -> None:
     """The streamed tier join: ``run_find_compare``'s drain with
     ``tiered_fuzzy_join`` (threshold 3) as each epoch's rows, over a
     catalog prepared once and released when the drain ends."""
-    from functools import partial
-
     from data_finder_comparator_spark.operators.fuzzy_join import (
         prepare_candidates,
         tiered_fuzzy_join,
@@ -90,8 +88,9 @@ def _drain_tiers(spark, probes_dir, cand, sink, checkpoint=None) -> None:
             spark,
             str(probes_dir),
             sink,
-            prepared,
-            partial(tiered_fuzzy_join, threshold=3),
+            lambda batch, epoch_reg: tiered_fuzzy_join(
+                batch, prepared.c, threshold=3, cache_registry=epoch_reg, prepared=prepared
+            ),
             checkpoint=checkpoint,
         )
     finally:

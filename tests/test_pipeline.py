@@ -93,12 +93,12 @@ def test_streaming_mode_and_distances(spark, tmp_path):
         )
 
 
-def _write_stream_fixtures(tmp_path, n_files: int = 2):
+def _write_stream_fixtures(tmp_path, n_files: int = 2, repeat: int = 1):
     """A two-file catalog with drifting schemas and ``n_files`` probe
     files in one folder (the stream drains whole files per micro-batch).
     Each file holds an exact, a unique-best, a tied-best and a
-    poor-only probe; ``src`` names the file, so the sink can be split
-    back into files."""
+    poor-only probe, each ``repeat`` times; ``src`` names the file, so
+    the sink can be split back into files."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -125,7 +125,7 @@ def _write_stream_fixtures(tmp_path, n_files: int = 2):
     search = tmp_path / "search"
     search.mkdir()
     for i in range(n_files):
-        keys = probes[i % 2]
+        keys = probes[i % 2] * repeat
         pq.write_table(
             pa.table({
                 "sku": keys,
@@ -147,41 +147,26 @@ def _cache_entries(spark) -> int:
 
 
 @pytest.mark.parametrize("path", ["dense", "banded", "large_files"])
-def test_streaming_sink_equals_batch_per_file(spark, tmp_path, monkeypatch, path):
+def test_streaming_sink_equals_batch_per_file(spark, tmp_path, path):
     """A streamed run's sink equals, file by file, a batch run of each
-    probe file (row identity is per file in streaming mode). With the
-    catalog under the dense cap every epoch takes the dense one-pass
-    path over the catalog prepared once; with the cap forced to 0 the
-    banded plan over it; and with files whose rows times the catalog
-    size pass the epoch pair gate (4 probes x 7 catalog keys here) the
-    batch-mode plan."""
-    from data_finder_comparator_spark import pipeline
-    from data_finder_comparator_spark.operators import fuzzy_join
-
-    if path == "banded":
-        monkeypatch.setattr(fuzzy_join, "_DENSE_CAND_MAX", 0)
-    if path == "large_files":
-        monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7 - 1)
-    else:
-        monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7)
-    dense_calls = []
-    real_dense = fuzzy_join._dense_tiers
-    monkeypatch.setattr(
-        fuzzy_join,
-        "_dense_tiers",
-        lambda *a: dense_calls.append(1) or real_dense(*a),
-    )
-    search_path, folder = _write_stream_fixtures(tmp_path)
+    probe file: every epoch runs the batch plan over the files it
+    takes. ``dense`` pairs every probe key with every catalog key
+    (broadcast blocking); ``banded`` blocks the pairs by length band;
+    ``large_files`` repeats each probe row 16 times, so the decisions,
+    made once per distinct key, fan back out to every row of a file."""
+    strategy = "band" if path == "banded" else "broadcast"
+    repeat = 16 if path == "large_files" else 1
+    search_path, folder = _write_stream_fixtures(tmp_path, repeat=repeat)
     cfg = EngineConfig(
         search_path=search_path,
         data_folder=folder,
         output_path=str(tmp_path / "stream_out"),
         threshold=3,
+        strategy=strategy,
         streaming=True,
         output_distances=True,
     )
     sink = run_find_compare(spark, cfg)
-    assert len(dense_calls) == (2 if path == "dense" else 0)
 
     def rows(df):
         return sorted(map(repr, df.select(sorted(df.columns)).collect()))
@@ -193,10 +178,12 @@ def test_streaming_sink_equals_batch_per_file(spark, tmp_path, monkeypatch, path
                 search_path=f"{search_path}/probes-{i:03d}.parquet",
                 data_folder=folder,
                 threshold=3,
+                strategy=strategy,
                 output_distances=True,
             ),
         )
         assert rows(sink.filter(F.col("src") == f"f{i}")) == rows(batch)
+    assert sink.count() == 2 * 4 * repeat
     got = {r.sku: r.match_dist for r in sink.collect()}
     assert got["ch s09ftxd bl sc"] == 0  # exact: kept
     assert got["cold widget"] == 1  # unique best: replaced
@@ -205,8 +192,8 @@ def test_streaming_sink_equals_batch_per_file(spark, tmp_path, monkeypatch, path
 
 
 def test_streaming_releases_prepared_catalog(spark, tmp_path):
-    """The catalog prepared for a streamed run is released when the
-    call returns, and also when it raises after the preparation (here
+    """A streamed run leaves no cache entry behind when the call
+    returns, and none when it raises after reading the catalog (here
     a search path that does not exist)."""
     search_path, folder = _write_stream_fixtures(tmp_path)
     cfg = EngineConfig(
@@ -264,9 +251,9 @@ def test_streaming_merges_probe_schemas_under_merge_schema(spark, tmp_path, monk
     schemas = []
     real_curate = pipeline._curate
 
-    def curate(spark, search, *a, **kw):
+    def curate(search, *a, **kw):
         schemas.append(search.schema)
-        return real_curate(spark, search, *a, **kw)
+        return real_curate(search, *a, **kw)
 
     monkeypatch.setattr(pipeline, "_curate", curate)
     sink = run_find_compare(
@@ -309,52 +296,33 @@ def test_streaming_leaves_no_checkpoint(spark, tmp_path):
     assert list(ckpt.iterdir()) == []
 
 
-def test_streaming_packs_files_by_pair_budget(spark, tmp_path, monkeypatch):
-    """Each streamed epoch packs as many whole files as the pair budget
-    holds (4 probes x 7 catalog keys per file here): a budget of two
-    files drains 5 files in 3 dense epochs, and the sink still equals a
-    batch run of each file. A budget below one file takes the
-    batch-mode plan, one epoch per file."""
+def test_streaming_drains_available_files_in_one_epoch(spark, tmp_path, monkeypatch):
+    """An epoch takes every file available, so 5 probe files drain in
+    one epoch, and the sink still equals a batch run of each file."""
     from data_finder_comparator_spark import pipeline
-    from data_finder_comparator_spark.operators import fuzzy_join
 
-    dense_calls = []
-    real_dense = fuzzy_join._dense_tiers
-    monkeypatch.setattr(
-        fuzzy_join,
-        "_dense_tiers",
-        lambda *a: dense_calls.append(1) or real_dense(*a),
-    )
-    # one entry per epoch: did it get the prepared catalog?
     epochs = []
-    real_curate = pipeline._curate
+    real_write = pipeline._write_epoch
     monkeypatch.setattr(
-        pipeline,
-        "_curate",
-        lambda *a, **kw: epochs.append(kw.get("prepared") is not None) or real_curate(*a, **kw),
+        pipeline, "_write_epoch", lambda *a: epochs.append(a[-1]) or real_write(*a)
     )
     search_path, folder = _write_stream_fixtures(tmp_path, n_files=5)
-
-    def streamed(name):
-        return run_find_compare(
-            spark,
-            EngineConfig(
-                search_path=search_path,
-                data_folder=folder,
-                output_path=str(tmp_path / name),
-                threshold=3,
-                streaming=True,
-                output_distances=True,
-            ),
-        )
+    sink = run_find_compare(
+        spark,
+        EngineConfig(
+            search_path=search_path,
+            data_folder=folder,
+            output_path=str(tmp_path / "out"),
+            threshold=3,
+            streaming=True,
+            output_distances=True,
+        ),
+    )
+    assert epochs == [0]
 
     def rows(df):
         return sorted(map(repr, df.select(sorted(df.columns)).collect()))
 
-    monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 2 * 4 * 7)
-    sink = streamed("packed")
-    assert len(dense_calls) == 3
-    assert epochs == [True] * 3
     for i in range(5):
         batch = run_find_compare(
             spark,
@@ -366,14 +334,6 @@ def test_streaming_packs_files_by_pair_budget(spark, tmp_path, monkeypatch):
             ),
         )
         assert rows(sink.filter(F.col("src") == f"f{i}")) == rows(batch)
-
-    monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7 - 1)
-    dense_calls.clear()
-    epochs.clear()
-    one_per_file = streamed("one_per_file")
-    assert dense_calls == []
-    assert epochs == [False] * 5
-    assert rows(one_per_file) == rows(sink)
 
 
 def test_streaming_epoch_replay_writes_rows_once(spark, tmp_path, monkeypatch):
@@ -432,13 +392,13 @@ def test_streaming_epoch_replay_writes_rows_once(spark, tmp_path, monkeypatch):
     assert pq.read_table(out).num_rows == n
 
 
-# Job-count floor of a streamed run_find_compare against a small catalog,
-# by job-id range: per micro-batch 4 (the dense tier pass with its
-# curation, and the sink write), per call 4 more (catalog preparation).
-# Catalog, probe and sink schemas come from footers on the driver and
-# cost none. Counts do not move with host noise.
-_STREAM_JOBS_PER_BATCH = 4
-_STREAM_JOBS_FIXED = 4
+# Jobs of one run_find_compare call against a small catalog, by job-id
+# range. Catalog, probe and sink schemas come from footers on the
+# driver and cost none. A batch call appending to a sink launches 5, and
+# a streamed call, whose one epoch runs the same plan, 5 too. Counts do
+# not move with host noise.
+_BATCH_JOBS = 5
+_STREAM_JOBS = 5
 
 
 def _stream_jobs(spark, tmp_path, n_files: int) -> int:
@@ -452,21 +412,21 @@ def _stream_jobs(spark, tmp_path, n_files: int) -> int:
     return _jobs_launched(spark, lambda: run_find_compare(spark, cfg))
 
 
-def test_streaming_job_count(spark, tmp_path, monkeypatch):
-    """At the default pair budget a 1-file and a 2-file streamed run
-    share one epoch and launch the same jobs. With the budget forced
-    to one file's pairs, the prepared catalog keeps each micro-batch at
-    its job floor: the two runs differ by one batch's jobs."""
-    from data_finder_comparator_spark import pipeline
+def test_streaming_job_count(spark, tmp_path):
+    """A 1-file and a 2-file streamed run share one epoch and launch
+    the same jobs."""
+    counts = [_stream_jobs(spark, tmp_path, n) for n in (1, 2)]
+    assert counts == [_STREAM_JOBS] * 2, counts
 
-    packed = [_stream_jobs(spark, tmp_path / "packed", n) for n in (1, 2)]
-    assert packed[0] == packed[1], packed
 
-    monkeypatch.setattr(pipeline, "_DENSE_EPOCH_PAIRS", 4 * 7)
-    counts = [_stream_jobs(spark, tmp_path / "per_file", n) for n in (1, 2)]
-    per_batch = counts[1] - counts[0]
-    assert per_batch <= _STREAM_JOBS_PER_BATCH, counts
-    assert counts[0] - per_batch <= _STREAM_JOBS_FIXED, counts
+def test_run_find_compare_job_count(spark, tmp_path):
+    """A batch call runs one plan over the distinct probe keys: no
+    row numbering, tier table or poor-tier escalation jobs."""
+    search_path, folder = _write_stream_fixtures(tmp_path, n_files=2)
+    cfg = EngineConfig(
+        search_path=search_path, data_folder=folder, output_path=str(tmp_path / "out")
+    )
+    assert _jobs_launched(spark, lambda: run_find_compare(spark, cfg)) == _BATCH_JOBS
 
 
 def test_read_folder_launches_no_job(spark, tmp_path):
